@@ -7,6 +7,13 @@ with scale-ready defaults: AQE on (runtime coalescing, skew-join
 handling, broadcast fallback), Arrow transfer for the vectorized
 kernels, and a shuffle-partition count sized to the local test harness
 but overridable for cluster deployment.
+
+That count (32 by default) is for batch plans, where AQE coalesces the
+partitions at run time. Streams run without AQE and a stateful stream
+keeps its state-partition count for life; each state partition costs a
+task and a delta-file write on every micro-batch commit. So stateful
+streams size their state to the task slots instead, through
+``streaming/stateful.py::start_stateful``.
 """
 
 from __future__ import annotations
@@ -29,6 +36,11 @@ def get_session(
     Local-mode parallelism comes from ``$SPARK_GRAFT_CPUS`` (harness
     contract); on a real cluster pass ``master=None`` and submit with
     ``spark-submit`` so the cluster manager decides.
+
+    ``shuffle_partitions`` (default 32) is the batch shuffle count. It
+    does not size streaming state: ``start_stateful`` starts stateful
+    queries with one state partition per task slot, because their
+    commit cost is per partition and AQE cannot coalesce it away.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # local mode = single JVM: driver memory is the only heap knob that

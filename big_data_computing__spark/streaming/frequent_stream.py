@@ -9,9 +9,10 @@ Mapping (SURVEY.md §2.9):
   source); the reference's 10 ms batch interval is below practical
   Structured Streaming latency — semantics, not latency, is the parity
   target.
-- T4 exact counts → stateful ``groupBy().count()`` in update mode
+- T4 exact counts → stateful ``groupBy().count()`` in complete mode
   (:func:`exact_counts_query`) — Spark's distributed streaming state
   replaces the reference's driver dict (big_data_computing_3.py:84-88).
+  Its state is sized to the task slots, not the batch shuffle default.
 - T2/T5/T6 samplers → ``foreachBatch`` over a :class:`SamplerState`. The
   engine's samplers are **counter-based** (operators/frequent.py): each
   batch only appends its accepted writes / admissions, keyed by the
@@ -36,6 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions.hashing import TWO_POW_60
 from ..functions.sqlsafe import sql_str
 from ..operators.frequent import reservoir_size, sticky_rate
+from .stateful import start_stateful
 
 ITEM_SCHEMA = T.StructType(
     [
@@ -98,18 +100,19 @@ def file_items(spark: SparkSession, directory: str) -> DataFrame:
 def exact_counts_query(
     items: DataFrame, checkpoint: str, query_name: str = "exact_counts"
 ) -> StreamingQuery:
-    """Stateful exact per-item counts, update mode → in-memory sink.
+    """Stateful exact per-item counts, complete mode → in-memory sink,
+    with one state partition per task slot (:func:`start_stateful`).
 
     Read results via ``spark.sql(f"SELECT * FROM {query_name}")``.
     """
     counts = items.groupBy("item").count()
-    return (
+    writer = (
         counts.writeStream.outputMode("complete")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint)
-        .start()
     )
+    return start_stateful(writer, items.sparkSession)
 
 
 def _u(tag: str, seed: int, t: int) -> float:
