@@ -829,7 +829,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("vec_id").cast("long").alias("id"),
             as_double_vec(F.col("embedding")).alias("features"),
         )
-        centers = _cl.mr_fft(pts, k=FFT_K, l=FFT_L, seed=SEED).centers
+        centers = _cl.mr_fft_centers(pts, k=FFT_K, l=FFT_L, seed=SEED)
         tmp = tempfile.mkdtemp(prefix="knn_idx_")
         try:
             st = _ans.KnnIndexState(
@@ -1039,9 +1039,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def t6_sticky_report(spark, sf_dir):
-        stream = _rd.event_stream_table(spark, sf_dir)
-        n = stream.count()
-        return _fr.sticky_report(stream, n, PHI, EPSILON, DELTA, SEED)
+        return _fr.sticky_report(
+            _rd.event_stream_table(spark, sf_dir),
+            None, PHI, EPSILON, DELTA, SEED,
+        )
 
     def x_weighted_reservoir(spark, sf_dir):
         # Efraimidis–Spirakis A-Res/A-ExpJ: documents sampled without

@@ -218,6 +218,47 @@ class MRFFTResult:
     timings_ms: dict[str, int] = field(default_factory=dict)
 
 
+def _coreset_matrix(
+    points: DataFrame,
+    k: int,
+    l: int,
+    seed: int,
+    id_col: str,
+    features_col: str,
+    fast: bool,
+) -> np.ndarray:
+    """MRFFT Round 1: the coreset, collected to the driver."""
+    r1 = (
+        fft_coreset_fast(points, k, l, seed, features_col)
+        if fast
+        else fft_coreset(points, k, l, seed, id_col, features_col)
+    )
+    return np.array(
+        [row["features"] for row in r1.collect()],
+        dtype=np.float64,
+    )
+
+
+def mr_fft_centers(
+    points: DataFrame,
+    k: int,
+    l: int,
+    seed: int = 0,
+    id_col: str = "id",
+    features_col: str = "features",
+    fast: bool = False,
+) -> np.ndarray:
+    """MRFFT Rounds 1+2: the k centers, without the radius pass.
+
+    For callers that only partition by the centers (IVF cells, the
+    d-dimensional outlier index): skipping Round 3 saves a full pass
+    over the points. :func:`mr_fft` runs the same two rounds, so both
+    return the same centers.
+    """
+    coreset = _coreset_matrix(points, k, l, seed, id_col, features_col, fast)
+    return sequential_fft(coreset, k, seed=seed)
+
+
 def mr_fft(
     points: DataFrame,
     k: int,
@@ -231,6 +272,7 @@ def mr_fft(
 
     Returns the k-center radius (objective value), the centers, and
     per-round wall-clock ms ("r1_coreset", "r2_centers", "r3_radius").
+    Rounds 1+2 are :func:`mr_fft_centers`, timed round by round.
 
     ``fast=True`` selects the shuffle-free per-partition R1
     (:func:`fft_coreset_fast` — the reference's own R1 shape; coreset
@@ -241,15 +283,7 @@ def mr_fft(
     wide embeddings.
     """
     t0 = time.time()
-    r1 = (
-        fft_coreset_fast(points, k, l, seed, features_col)
-        if fast
-        else fft_coreset(points, k, l, seed, id_col, features_col)
-    )
-    coreset = np.array(
-        [row["features"] for row in r1.collect()],
-        dtype=np.float64,
-    )
+    coreset = _coreset_matrix(points, k, l, seed, id_col, features_col, fast)
     t1 = time.time()
     centers = sequential_fft(coreset, k, seed=seed)
     t2 = time.time()

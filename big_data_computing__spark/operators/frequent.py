@@ -81,6 +81,13 @@ def item_counts(stream: DataFrame, item_col: str = "item") -> DataFrame:
     )
 
 
+def _stream_total(stream: DataFrame) -> DataFrame:
+    """The stream length as a one-row ``_total`` table for a broadcast
+    cross join. Every operator builds the identical subplan, so Spark
+    reuses one exchange for all of them within a query."""
+    return F.broadcast(stream.agg(F.count("*").alias("_total")))
+
+
 def true_frequent_items(
     stream: DataFrame, phi: float, item_col: str = "item"
 ) -> DataFrame:
@@ -91,9 +98,8 @@ def true_frequent_items(
     (reference: big_data_computing_3.py:10-12).
     """
     counts = item_counts(stream, item_col)
-    total = stream.agg(F.count("*").alias("_total"))
     return (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(_stream_total(stream))
         .where(F.col("cnt") >= F.lit(phi) * F.col("_total"))
         .select("item", "cnt")
     )
@@ -353,7 +359,7 @@ FROM top
 
 
 def sticky_counts(
-    stream: DataFrame, n: int, r: float, seed: int = 0
+    stream: DataFrame, n: int | None, r: float, seed: int = 0
 ) -> DataFrame:
     """Sticky-sampling estimated counts: DataFrame[item, est_cnt].
 
@@ -364,11 +370,18 @@ def sticky_counts(
     of its occurrences at-or-after its first "lucky" occurrence, where
     each position is lucky independently with probability r/n. That
     reformulation is one group-by + one join — no sequential state.
+
+    ``n=None`` takes n from the stream inside the plan (a broadcast
+    count); the rate is the same double division as ``r / n``.
     """
-    rate = r / n
-    lucky = _u("sticky", seed, F.col("seq")) < F.lit(rate)
+    if n is None:
+        sampled = stream.crossJoin(_stream_total(stream))
+        rate = F.lit(r) / F.col("_total")
+    else:
+        sampled, rate = stream, F.lit(r / n)
+    lucky = _u("sticky", seed, F.col("seq")) < rate
     admissions = (
-        stream.where(lucky)
+        sampled.where(lucky)
         .groupBy("item")
         .agg(F.min("seq").alias("aseq"))
     )
@@ -382,7 +395,7 @@ def sticky_counts(
 
 def sticky_report(
     stream: DataFrame,
-    n: int,
+    n: int | None,
     phi: float,
     epsilon: float,
     delta: float,
@@ -390,11 +403,21 @@ def sticky_report(
 ) -> DataFrame:
     """Sticky frequent-item estimate with `+`/`-` truth flags:
     DataFrame[item, est_cnt, flag]. Output filter est_cnt > (φ−ε)·n
-    (reference big_data_computing_3.py:110)."""
+    (reference big_data_computing_3.py:110).
+
+    ``n`` is the stream length. ``None`` derives it inside the plan from
+    the same broadcast count the truth flags use, so building the report
+    runs no job; the threshold is the same double product as
+    ``(phi - epsilon) * n``.
+    """
     r = sticky_rate(phi, epsilon, delta)
-    est = sticky_counts(stream, n, r, seed).where(
-        F.col("est_cnt") > F.lit((phi - epsilon) * n)
-    )
+    est = sticky_counts(stream, n, r, seed)
+    if n is None:
+        est = est.crossJoin(_stream_total(stream)).where(
+            F.col("est_cnt") > F.lit(phi - epsilon) * F.col("_total")
+        )
+    else:
+        est = est.where(F.col("est_cnt") > F.lit((phi - epsilon) * n))
     truth = true_frequent_items(stream, phi).select(
         "item", F.lit(True).alias("_hit")
     )
@@ -416,11 +439,12 @@ def sticky_report_sql(
     """DuckDB twin of :func:`sticky_report` — identical arithmetic.
 
     ``n=None`` derives the stream length inside the SQL
-    (``SELECT COUNT(*) FROM s``), so the oracle tracks the engine query
-    (which computes ``n = stream.count()``) at any scale factor instead
-    of silently diverging away from a hardcoded fixture size. Float shape
-    is preserved: DuckDB's ``DOUBLE / BIGINT`` and ``DOUBLE * BIGINT``
-    are the same IEEE ops as Python's ``r / n`` and ``(phi-epsilon) * n``.
+    (``SELECT COUNT(*) FROM s``), as :func:`sticky_report` with
+    ``n=None`` does inside its plan, so the oracle tracks the engine
+    query at any scale factor instead of silently diverging away from a
+    hardcoded fixture size. Float shape is preserved: DuckDB's
+    ``DOUBLE / BIGINT`` and ``DOUBLE * BIGINT`` are the same IEEE ops as
+    Python's ``r / n`` and ``(phi-epsilon) * n``.
     """
     r = sticky_rate(phi, epsilon, delta)
     if n is None:
@@ -1457,9 +1481,8 @@ def mg_frequent_exact(
     counts = matched.groupBy(F.col(item_col).alias("item")).agg(
         F.count("*").alias("cnt")
     )
-    total = stream.agg(F.count("*").alias("_total"))
     return (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(_stream_total(stream))
         .where(F.col("cnt") >= F.lit(phi) * F.col("_total"))
         .select("item", "cnt")
     )

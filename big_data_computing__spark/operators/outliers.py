@@ -25,14 +25,12 @@ Scale design (100 TB target):
 - MRApproxOutliers: points → cell counts is one partial+final hash
   aggregation (Catalyst does the map-side combine the reference hand-rolls
   in ``gather_pairs``, big_data_computing_1.py:67-75). The N3/N7
-  neighborhood sums become a **broadcast equi-join**: the (small) cell
-  table explodes 49 neighbor offsets on the probe side and joins the cell
-  table again on the shifted key — replacing the reference's
+  neighborhood sums become a **scatter-aggregate**: every cell sends its
+  count to the 49 cells of its 7×7 neighborhood and one hash aggregation
+  on the target cell sums them — replacing the reference's
   ``collectAsMap`` + closure-captured dict (big_data_computing_1.py:87-95),
   which would OOM the driver at scale. The cell table is ~|points| / density
-  rows, so the broadcast holds far beyond the reference's limits; if it ever
-  outgrows the broadcast threshold AQE falls back to a shuffled hash join
-  with no code change.
+  rows and is scanned once; nothing is broadcast or cached.
 """
 
 from __future__ import annotations
@@ -47,11 +45,14 @@ _OFFSETS_7X7 = [(di, dj) for di in range(-3, 4) for dj in range(-3, 4)]
 
 
 def _offsets_array(offsets: list[tuple[int, int]]) -> Column:
-    return F.array(
-        *[
-            F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-            for di, dj in offsets
-        ]
+    """The offsets as one literal array<struct<di, dj>>, rendered as a
+    single SQL expression: one JVM call instead of several per offset.
+    The optimized plan is the same as the element-wise
+    ``F.array(F.struct(F.lit(di), F.lit(dj)), ...)``."""
+    return F.expr(
+        "array("
+        + ", ".join(f"named_struct('di', {di}, 'dj', {dj})" for di, dj in offsets)
+        + ")"
     )
 
 
@@ -170,62 +171,42 @@ def cell_counts(
     )
 
 
-def cells_with_neighborhood(
-    cells: DataFrame,
-    cache_cells: bool = True,
-    broadcast_cells: bool = True,
-) -> DataFrame:
+def cells_with_neighborhood(cells: DataFrame) -> DataFrame:
     """Attach N3 and N7 neighborhood sums to each cell.
 
-    Explode-49-offsets broadcast equi-join (SURVEY.md J2/A4/A5): each cell
-    emits 49 probe keys (its 7×7 neighborhood); one equi-join against the
-    cell table and a conditional sum produce both N3 and N7 in a single
-    pass. Inner join suffices — the (0,0) offset always self-matches, so
-    every cell survives.
-
-    The cell table feeds both join sides, so without caching Spark would
-    scan + aggregate the points twice (the same recomputation bug the
-    reference has, SURVEY.md §3 EP1.6). ``cache_cells`` persists the
-    (small) cell table between the two uses; Spark's LRU eviction
-    reclaims it.
-
-    ``broadcast_cells``: the cell table is |points|/density rows — far
-    smaller than the input, but with a tiny D over a huge domain it can
-    still be large. Set False to drop the broadcast hint and let the
-    equi-join shuffle (AQE will still convert back to broadcast at
-    runtime if the actual size allows).
+    Scatter-aggregate (SURVEY.md A4/A5): each cell sends its ``cnt`` to
+    the 49 cells of its 7×7 neighborhood, flagged ``own`` for the (0,0)
+    offset and ``near3`` inside the 3×3 core. One ``groupBy`` on the
+    target cell then sums N3, N7 and the cell's own count; targets that
+    received no ``own`` share are empty cells and drop out. That is one
+    scan of the cell table and one hash aggregation: no self-join, so
+    the cell table needs no cache and no broadcast. Cells with a NULL
+    coordinate belong to no grid cell and are dropped.
     """
-    if cache_cells:
-        cells = cells.cache()
-    probes = cells.select(
-        "ci",
-        "cj",
-        "cnt",
-        F.explode(_offsets_array(_OFFSETS_7X7)).alias("o"),
-    ).select(
-        "ci",
-        "cj",
-        "cnt",
-        (F.col("ci") + F.col("o.di")).alias("nci"),
-        (F.col("cj") + F.col("o.dj")).alias("ncj"),
-        F.col("o.di").alias("di"),
-        F.col("o.dj").alias("dj"),
-    )
-    nbr = cells.select(
-        F.col("ci").alias("nci"),
-        F.col("cj").alias("ncj"),
-        F.col("cnt").alias("ncnt"),
-    )
-    near3 = (F.abs(F.col("di")) <= 1) & (F.abs(F.col("dj")) <= 1)
-    build = F.broadcast(nbr) if broadcast_cells else nbr
+    o = F.explode(_offsets_array(_OFFSETS_7X7)).alias("o")
+    own = (F.col("o.di") == 0) & (F.col("o.dj") == 0)
+    near3 = (F.abs(F.col("o.di")) <= 1) & (F.abs(F.col("o.dj")) <= 1)
     return (
-        probes.join(build, ["nci", "ncj"])
-        .groupBy("ci", "cj", "cnt")
+        cells.where(F.col("ci").isNotNull() & F.col("cj").isNotNull())
+        .select("ci", "cj", "cnt", o)
+        .groupBy(
+            (F.col("ci") + F.col("o.di")).alias("ci"),
+            (F.col("cj") + F.col("o.dj")).alias("cj"),
+        )
         .agg(
-            F.coalesce(
-                F.sum(F.when(near3, F.col("ncnt"))), F.lit(0)
-            ).alias("n3"),
-            F.sum("ncnt").alias("n7"),
+            F.sum(F.when(own, F.col("cnt"))).alias("own"),
+            F.sum(F.when(near3, F.col("cnt"))).alias("n3"),
+            F.sum("cnt").alias("n7"),
+        )
+        .where(F.col("own").isNotNull())
+        # coalesce keeps cnt and n3 non-nullable in the schema, as the
+        # count(*) they come from is
+        .select(
+            "ci",
+            "cj",
+            F.coalesce("own", F.lit(0)).alias("cnt"),
+            F.coalesce("n3", F.lit(0)).alias("n3"),
+            "n7",
         )
     )
 
@@ -349,16 +330,22 @@ def ball_counts_nd_ivf(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .clustering import assign_clusters, min_dist_to_centers, mr_fft
+    from .clustering import (
+        assign_clusters,
+        min_dist_to_centers,
+        mr_fft_centers,
+    )
 
-    res = mr_fft(points, k=n_cells, l=l, seed=seed, id_col=id_col,
-                 features_col=features_col)
-    centers = np.asarray(res.centers, dtype=np.float64)
+    centers = mr_fft_centers(points, k=n_cells, l=l, seed=seed,
+                             id_col=id_col, features_col=features_col)
+    # read twice (radii collect + join); localCheckpoint, not cache(),
+    # so the blocks go when the result is GC'd instead of staying in
+    # the session's cache across calls
     assigned = assign_clusters(
         min_dist_to_centers(points, centers, features_col),
         centers,
         features_col,
-    ).cache()
+    ).localCheckpoint()
     radii_rows = (
         assigned.groupBy("cluster")
         .agg(F.max("min_dist").alias("r"))

@@ -37,6 +37,13 @@ BM25_SCORE_EXPR = (
 )
 
 
+# Largest k that bm25_topk answers with Spark's top-k heap
+# (TakeOrderedAndProject). That heap allocates its buffers for k rows
+# up front: k=10**9 asks for ~16 GB whatever the row count. Above this
+# k, a row_number filter costs time and memory in the rows, not in k.
+TOPK_HEAP_MAX = 100_000
+
+
 def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
@@ -70,7 +77,8 @@ def bm25_topk(
     (map-side combined, the word-count shape), per-doc lengths over the
     full explode, a 2-scalar global (broadcast), a term-keyed df
     aggregation over ≤|query| rows (broadcast), and a TakeOrderedAnd-
-    Project top-k — no shuffle wider than the tf aggregation. At 100 TB
+    Project top-k (a ``row_number`` filter above ``TOPK_HEAP_MAX``) —
+    no shuffle wider than the tf aggregation. At 100 TB
     the only large intermediate is (doc_id, term) for query terms only:
     the `isin` filter prunes before the shuffle, so cost scales with
     postings length, not corpus size — the inverted-index access path
@@ -111,14 +119,17 @@ def bm25_topk(
             F.expr(BM25_SCORE_EXPR).alias("s_milli"),
         )
     )
+    ranked = scored.groupBy("doc_id").agg(
+        F.count("*").cast("int").alias("n_hit_terms"),
+        F.sum("s_milli").cast("long").alias("score_milli"),
+    )
+    order = [F.col("score_milli").desc(), F.col("doc_id")]
+    if k <= TOPK_HEAP_MAX:
+        return ranked.orderBy(*order).limit(k)
     return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("int").alias("n_hit_terms"),
-            F.sum("s_milli").cast("long").alias("score_milli"),
-        )
-        .orderBy(F.col("score_milli").desc(), "doc_id")
-        .limit(k)
+        ranked.withColumn("_rank", F.row_number().over(Window.orderBy(*order)))
+        .where(F.col("_rank") <= F.lit(k))
+        .drop("_rank")
     )
 
 

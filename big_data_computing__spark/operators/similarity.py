@@ -328,7 +328,11 @@ def cosine_near_pairs_blocked(
     """
     import math
 
-    from .clustering import assign_clusters, min_dist_to_centers, mr_fft
+    from .clustering import (
+        assign_clusters,
+        min_dist_to_centers,
+        mr_fft_centers,
+    )
 
     d_thresh = math.sqrt(max(2.0 - 2.0 * (threshold - 1e-6), 0.0))
     base = _vec_df(emb)
@@ -338,13 +342,12 @@ def cosine_near_pairs_blocked(
         "nrm",
         F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u"),
     )
-    res = mr_fft(
+    centers = mr_fft_centers(
         unit.select(F.col("vid").alias("id"), F.col("u").alias("features")),
         k=n_cells,
         l=l,
         seed=seed,
     )
-    centers = np.asarray(res.centers, dtype=np.float64)
     # read 3× (radii collect + both join sides); localCheckpoint so the
     # blocks are freed when the result DataFrame is GC'd — cache() here
     # leaked storage across repeated operator calls in one session
@@ -720,14 +723,14 @@ def build_ivf_centroids(
     plain (serializable) list — persist alongside the corpus and feed to
     :func:`ivf_topk` via ``centers=`` so repeated queries skip the MRFFT
     training jobs. Deterministic for fixed (data, params)."""
-    from .clustering import mr_fft
+    from .clustering import mr_fft_centers
 
     pts = emb.select(
         F.col("vec_id").cast("long").alias("id"),
         as_double_vec(F.col("embedding")).alias("features"),
     )
-    res = mr_fft(pts, k=n_cells, l=l, seed=seed)
-    return [[float(v) for v in c] for c in res.centers]
+    centers = mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
+    return [[float(v) for v in c] for c in centers]
 
 
 def ivf_topk(
@@ -760,9 +763,9 @@ def ivf_topk(
         as_double_vec(F.col("embedding")).alias("features"),
     )
     if centers is None:
-        from .clustering import mr_fft
+        from .clustering import mr_fft_centers
 
-        centers = mr_fft(pts, k=n_cells, l=l, seed=seed).centers
+        centers = mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
     c = np.asarray(centers, dtype=np.float64)
     probe_udf, assign_udf = _cell_probe_udfs(c, nprobe, parity)
 
@@ -1206,9 +1209,9 @@ def ivf_pq_topk(
         as_double_vec(F.col("embedding")).alias("features"),
     )
     if centers is None:
-        from .clustering import mr_fft
+        from .clustering import mr_fft_centers
 
-        centers = mr_fft(pts, k=n_cells, l=l, seed=seed).centers
+        centers = mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
     books = (
         codebooks
         if codebooks is not None
@@ -1538,9 +1541,9 @@ def ivf_rpq_topk(
         as_double_vec(F.col("embedding")).alias("features"),
     )
     if centers is None:
-        from .clustering import mr_fft
+        from .clustering import mr_fft_centers
 
-        centers = mr_fft(pts, k=n_cells, l=l, seed=seed).centers
+        centers = mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
     books = (
         codebooks
         if codebooks is not None
@@ -2040,7 +2043,7 @@ def train_opq_ivf_rpq(
     centers, rotated-space residual codebooks). Rotation from
     :func:`train_opq`; centers/books fitted on the PARITY-rotated
     vectors so pinned goldens reproduce under oracle runs."""
-    from .clustering import mr_fft
+    from .clustering import mr_fft_centers
 
     rotation, _flat_books = train_opq(emb, m=m, ks=ks, seed=seed)
     remb = rotate_embeddings(emb, rotation, parity=True)
@@ -2050,7 +2053,7 @@ def train_opq_ivf_rpq(
     )
     centers = [
         [float(v) for v in c]
-        for c in mr_fft(pts, k=n_cells, l=l, seed=seed).centers
+        for c in mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
     ]
     books = train_pq_codebooks_residual(
         remb, centers, m=m, ks=ks, seed=seed
@@ -2829,9 +2832,9 @@ def cell_cosine_pairs(
         as_double_vec(F.col("embedding")).alias("features"),
     )
     if centers is None:
-        from .clustering import mr_fft
+        from .clustering import mr_fft_centers
 
-        centers = mr_fft(pts, k=n_cells, l=l, seed=seed).centers
+        centers = mr_fft_centers(pts, k=n_cells, l=l, seed=seed)
     c = np.asarray(centers, dtype=np.float64)
     _, assign_udf = _cell_probe_udfs(c, 1, parity)
     base = pts.select(

@@ -5,6 +5,13 @@ big_data_computing_2.py:149-150) with implicit schema-on-parse. The engine
 declares StructType schemas at every source (never ``inferSchema``) and
 treats Parquet as the canonical format (the harness fixtures in
 /root/testdata/sf*/).
+
+The ten fixture tables carry their schemas in :data:`FIXTURE_SCHEMAS`
+(column lists in FIXTURES.md §4). Each equals what Spark infers from the
+Parquet footer, nullability included: every column nullable, the
+``timestamp[us]`` columns as ``timestamp_ntz``, ``embedding`` as
+``array<float>``. Declaring them spares every :func:`read_table` call the
+footer-reading job that schema inference runs.
 """
 
 from __future__ import annotations
@@ -13,18 +20,44 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+
+def _nullable(**cols: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(n, t, True) for n, t in cols.items()])
+
+
+_I, _L, _D, _S = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_TS = T.TimestampNTZType()
+
+FIXTURE_SCHEMAS = {
+    "region": _nullable(r_regionkey=_I, r_name=_S),
+    "nation": _nullable(n_nationkey=_I, n_name=_S, n_regionkey=_I),
+    "customer": _nullable(
+        c_custkey=_L, c_name=_S, c_nationkey=_I, c_acctbal=_D, c_mktsegment=_S
+    ),
+    "supplier": _nullable(s_suppkey=_L, s_name=_S, s_nationkey=_I, s_acctbal=_D),
+    "part": _nullable(
+        p_partkey=_L, p_name=_S, p_brand=_S, p_type=_S, p_size=_I,
+        p_retailprice=_D,
+    ),
+    "orders": _nullable(
+        o_orderkey=_L, o_custkey=_L, o_orderstatus=_S, o_totalprice=_D,
+        o_orderdate=_TS, o_orderpriority=_S,
+    ),
+    "lineitem": _nullable(
+        l_orderkey=_L, l_partkey=_L, l_suppkey=_L, l_linenumber=_I,
+        l_quantity=_D, l_extendedprice=_D, l_discount=_D, l_tax=_D,
+        l_returnflag=_S, l_linestatus=_S, l_shipdate=_TS,
+    ),
+    "events": _nullable(
+        event_id=_L, ts=_TS, user_id=_L, event_type=_S, value=_D, props=_S
+    ),
+    "documents": _nullable(doc_id=_L, text=_S, lang=_S, source=_S, n_chars=_L),
+    "embeddings": _nullable(
+        vec_id=_L, embedding=T.ArrayType(T.FloatType(), True), label=_I
+    ),
+}
+
+TABLES = tuple(FIXTURE_SCHEMAS)
 
 POINTS_2D_SCHEMA = T.StructType(
     [
@@ -43,7 +76,9 @@ POINTS_ND_SCHEMA = T.StructType(
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one harness fixture table from a scale-factor directory."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
 
 
 def read_points_csv(spark: SparkSession, path: str) -> DataFrame:

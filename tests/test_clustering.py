@@ -59,6 +59,13 @@ def test_mrfft_deterministic_across_runs(spark, sf_dir):
     assert np.array_equal(r1.centers, r2.centers)
 
 
+@pytest.mark.parametrize("fast", [False, True])
+def test_mr_fft_centers_are_mr_fft_centers(spark, sf_dir, fast):
+    pts = embedding_points(spark, sf_dir)
+    got = C.mr_fft_centers(pts, k=4, l=2, seed=9, fast=fast)
+    assert np.array_equal(got, C.mr_fft(pts, k=4, l=2, seed=9, fast=fast).centers)
+
+
 def test_catalyst_min_dist_matches_pandas(spark, sf_dir):
     pts = embedding_points(spark, sf_dir).limit(50).cache()
     centers = np.array(

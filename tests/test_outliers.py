@@ -73,6 +73,38 @@ def test_neighborhood_sums(spark, tiny):
     assert cells[(0, 0)] == (3, 3, 3)
 
 
+def test_neighborhood_sums_match_python_reference(spark, sf_dir):
+    # a NULL coordinate has no cell: it adds to no sum and gets no row
+    pts = customer_points(spark, sf_dir).unionByName(
+        spark.createDataFrame(
+            [(-1, None, 5.0), (-2, 5.0, None)], "id long, x double, y double"
+        )
+    )
+    d = 500.0
+    cells = {
+        (r["ci"], r["cj"]): r["cnt"]
+        for r in O.cell_counts(pts, d).collect()
+        if r["ci"] is not None and r["cj"] is not None
+    }
+
+    def near(ci, cj, r):
+        return sum(
+            cells.get((ci + di, cj + dj), 0)
+            for di in range(-r, r + 1)
+            for dj in range(-r, r + 1)
+        )
+
+    want = {
+        (ci, cj): (cnt, near(ci, cj, 1), near(ci, cj, 3))
+        for (ci, cj), cnt in cells.items()
+    }
+    got = {
+        (r["ci"], r["cj"]): (r["cnt"], r["n3"], r["n7"])
+        for r in O.approx_outlier_cells(pts, d).collect()
+    }
+    assert got == want
+
+
 def test_summary_bracket_self_oracle(spark, sf_dir):
     """sure <= exact outliers <= sure + uncertain (reference's printed
     invariant, big_data_computing_1.py:180-186)."""

@@ -5,7 +5,13 @@ For each named registry query:
   2. times plan-build and execution separately (build = calling the
      registry fn, which for iterative operators runs eager jobs via
      localCheckpoint/count; exec = the final .collect())
-  3. snapshots the Spark REST API job list around the run and prints the
+  3. counts what the build alone costs: the Spark jobs that finished
+     while the registry fn ran (its job group, read through the status
+     tracker) and the py4j commands the driver sent to the JVM (the
+     gateway client's ``send_command`` is wrapped for the run; object
+     deletes are not counted). A build that sends one command per
+     literal shows up here even when it runs no job.
+  4. snapshots the Spark REST API job list around the run and prints the
      top jobs by duration with their descriptions — the local-mode
      equivalent of reading the UI's Jobs tab (guide §1.1/§7.1)
 
@@ -37,6 +43,40 @@ def _api(spark, path):
         return json.load(r)
 
 
+class Py4jCalls:
+    """Counts the commands the driver sends to the JVM over py4j.
+
+    Object deletes (py4j's memory commands) are left out: they are sent
+    when Python's garbage collector frees JavaObjects of earlier builds,
+    so they would land on whichever build runs at the time.
+    """
+
+    def __init__(self, spark) -> None:
+        self.n = 0
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+
+        def counted(command, *args, **kwargs):
+            if not command.startswith("m\n"):
+                self.n += 1
+            return send(command, *args, **kwargs)
+
+        # JavaObjects call send_command on this one client instance
+        client.send_command = counted
+
+
+def build_jobs(spark, group: str) -> int:
+    """Jobs of ``group`` that have finished."""
+    sc = spark.sparkContext
+    # the status tracker is fed by the listener bus; drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getJobInfo(j).status == "SUCCEEDED"
+        for j in tracker.getJobIdsForGroup(group)
+    )
+
+
 def main() -> None:
     tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,12 +88,20 @@ def main() -> None:
     # warm codegen/JVM once
     qs["o1_topk_orders"](spark, sf_dir).collect()
 
+    calls = Py4jCalls(spark)
+
     for name in names:
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         jobs_before = {j["jobId"] for j in _api(spark, "/jobs")}
+        group = f"profile-build:{name}"
+        spark.sparkContext.setJobGroup(group, f"profile:{name}")
+        calls_before = calls.n
         t0 = time.time()
         df = qs[name](spark, sf_dir)
         t_build = time.time() - t0
+        build_calls = calls.n - calls_before
+        spark.sparkContext._jsc.clearJobGroup()
+        n_build_jobs = build_jobs(spark, group)
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -81,6 +129,7 @@ def main() -> None:
         durs.sort(reverse=True)
         print(f"== {name}: build={t_build:.2f}s exec={t_exec:.2f}s "
               f"run2={t_total2:.2f}s jobs={len(jobs)} "
+              f"build_jobs={n_build_jobs} build_py4j_calls={build_calls} "
               f"plan={os.path.join(outdir, name + '_' + suffix + '.txt')}")
         for ms, jid, desc in durs[:12]:
             print(f"   {ms/1000.0:7.2f}s  job {jid}  {desc}")
