@@ -3203,8 +3203,9 @@ GROUP BY GROUPING SETS (
     def x_dedup_components_star(spark, sf_dir):
         # same contract as x_dedup_components via large-star/small-star
         # contraction (O(log² n) rounds on any graph shape vs diameter
-        # rounds for min-label propagation); shares the oracle
-        return _dd.duplicate_components_star(
+        # rounds for min-label propagation) — the same body as
+        # x_dedup_components_2p; shares the oracle
+        return _dd.duplicate_components_twophase(
             _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
         )
 
@@ -3259,8 +3260,7 @@ GROUP BY GROUPING SETS (
         ).select(F.col("doc_id").alias("vec_id"))
 
     def x_dedup_components_sc(spark, sf_dir):
-        # fourth CC implementation: hook + pointer-doubling shortcut
-        # (Shiloach-Vishkin / Kiveris et al. two-phase) — O(log n)
+        # hook + pointer-doubling shortcut (Shiloach-Vishkin) — O(log n)
         # rounds like Hash-to-Min but with LINEAR per-round state (one
         # parent row per vertex), closing the measured path-graph
         # blowup (STRESS.md r6); shares the CC oracle verbatim
@@ -3269,11 +3269,12 @@ GROUP BY GROUPING SETS (
         )
 
     def x_dedup_components_2p(spark, sf_dir):
-        # fifth CC implementation: large-star/small-star alternation
-        # (Kiveris et al. 2014 Alg. 3) — the variant whose PER-ROUND
-        # cost SHRINKS with the contracting edge list; measured 1.3x
-        # over hook+shortcut and 1.9x over min-label on the 10M-doc
-        # pipeline dup graph (STRESS.md r8); shares the CC oracle
+        # large-star/small-star alternation (Kiveris et al. 2014
+        # Alg. 3), the body behind x_dedup_components_star too — the
+        # variant whose PER-ROUND cost SHRINKS with the contracting
+        # edge list; measured 1.3x over hook+shortcut and 1.9x over
+        # min-label on the 10M-doc pipeline dup graph (STRESS.md r8);
+        # shares the CC oracle
         return _dd.duplicate_components_twophase(
             _dd.minhash_lsh_pairs(_docs(spark, sf_dir))
         )

@@ -127,12 +127,12 @@ BENCH_QUERIES = [
     # the composed embedding-curation pipeline (scatter → eigh →
     # whiten → SemDeDup in the whitened space)
     "x_pca_semdedup",
-    # fourth CC implementation: hook+shortcut pointer doubling —
-    # O(log n) rounds AND linear state (the recommended scale path
-    # after the r6 chain-graph measurements)
+    # hook+shortcut pointer doubling — O(log n) rounds AND linear
+    # state (the recommended scale path after the r6 chain-graph
+    # measurements)
     "x_dedup_components_sc",
-    # fifth CC implementation (r8): large-star/small-star alternation —
-    # the contracting-edge-list scale path (CC ladder in STRESS.md r8)
+    # large-star/small-star alternation (r8) — the contracting-edge-
+    # list scale path (CC ladder in STRESS.md r8)
     "x_dedup_components_2p",
     # the auto-dispatching closure (r9): localCheckpoint + edge count +
     # crossover dispatch — its tracked cost vs the direct variants IS

@@ -731,27 +731,16 @@ def duplicate_components(
             F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    # r11 (guide §1.2): rounds are chained lazily in windows of
-    # CC_UNROLL with ONE materializing sum-aggregate per window
-    # boundary. Labels are monotone non-increasing, so "boundary sum
-    # unchanged since the previous boundary" ⟺ no round in the window
-    # changed any label ⟺ the window's first state was already the
-    # fixpoint; overshoot rounds past the fixpoint are no-ops (min
-    # over an unchanged neighborhood), so boundary values are the
-    # fixpoint values exactly.
     prev_sum = None
-    rounds_done = 0
-    while rounds_done < max_iterations:
-        for _ in range(min(CC_UNROLL, max_iterations - rounds_done)):
-            prop = edges.join(
-                labels.withColumnRenamed("id", "s"), "s"
-            ).select(F.col("t").alias("id"), "lab")
-            labels = (
-                labels.union(prop)
-                .groupBy("id")
-                .agg(F.min("lab").alias("lab"))
-            ).localCheckpoint(eager=False)
-            rounds_done += 1
+    for _ in range(max_iterations):
+        prop = edges.join(
+            labels.withColumnRenamed("id", "s"), "s"
+        ).select(F.col("t").alias("id"), "lab")
+        labels = (
+            labels.union(prop)
+            .groupBy("id")
+            .agg(F.min("lab").alias("lab"))
+        ).localCheckpoint(eager=False)
         new_sum = _lab_sum(labels)
         if new_sum == prev_sum:
             break
@@ -759,11 +748,12 @@ def duplicate_components(
     else:
         # returning silently-wrong components is worse than failing:
         # propagation needs diameter rounds, so a graph deeper than the
-        # bound must go to the round-logarithmic star variant
+        # bound must go to a round-logarithmic variant
         raise RuntimeError(
             f"duplicate_components did not converge in {max_iterations} "
             "rounds (graph diameter exceeds the bound); use "
-            "duplicate_components_star for high-diameter graphs"
+            "duplicate_components_twophase or "
+            "duplicate_components_shortcut for high-diameter graphs"
         )
     return labels.select(
         F.col("id").alias("doc_id"), F.col("lab").alias("component_id")
@@ -1267,109 +1257,6 @@ def ngram_jaccard_pairs_prefix(
         .where(jac >= F.lit(threshold))
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
-
-
-def duplicate_components_star(
-
-    pairs: DataFrame,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction — same contract as :func:`duplicate_components`
-    (DataFrame[doc_id, component_id], component_id = min id), different
-    convergence behavior: O(log² n) rounds on ANY graph shape, where
-    min-label propagation needs diameter rounds.
-
-    The algorithm (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14):
-
-    - **large-star**: every node attaches its strictly-larger neighbors
-      to the minimum of its closed neighborhood;
-    - **small-star**: every node attaches its not-larger neighbors (and
-      itself) to that minimum.
-
-    Both are one groupBy-min plus one re-join per round (map-side
-    combined; only (node, node) long pairs shuffle), with per-round
-    ``localCheckpoint`` for the same lineage reason as the sibling.
-    Prefer this form when duplicate chains are long (bot-generated
-    near-identical sequences); the min-label sibling does fewer total
-    shuffles on the dense, tiny-diameter clusters typical of web dedup.
-    """
-    edges = (
-        pairs.select(F.col(doc_a).alias("u"), F.col(doc_b).alias("v"))
-        .union(pairs.select(F.col(doc_b).alias("u"), F.col(doc_a).alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    members = edges.select(F.col("u").alias("doc_id")).distinct()
-
-    def large_star(e: DataFrame) -> DataFrame:
-        # operate on the symmetrized neighborhood (the paper's map step
-        # emits every edge in both directions)
-        sym = e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # orient every edge high → low, then attach each node's smaller
-        # neighbors (and the node itself) to the neighborhood minimum
-        dir_ = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).where(F.col("u") != F.col("v")).distinct()
-        mins = dir_.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        out = (
-            dir_.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-        )
-        return (
-            out.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-        )
-
-    prev_sig = None
-    for _ in range(max_iterations):
-        edges = small_star(large_star(edges))
-        sig = edges.agg(
-            F.count("*").alias("n"),
-            # overflow-free order-insensitive checksum (edges are
-            # distinct, so xor cannot cancel duplicates)
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
-    else:
-        # same contract as the min-label sibling: a silently-partial
-        # contraction is a wrong answer, not a degraded one. O(log² n)
-        # rounds makes exhaustion pathological, but fail loudly anyway.
-        raise RuntimeError(
-            f"duplicate_components_star did not reach its edge-set "
-            f"fixpoint in {max_iterations} rounds; raise max_iterations"
-        )
-    # fixpoint: every edge points a node at its component min
-    labels = edges.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("component_id")
-    )
-    roots = members.join(
-        labels.select("doc_id"), "doc_id", "left_anti"
-    ).select("doc_id", F.col("doc_id").alias("component_id"))
-    return labels.union(roots)
 
 
 # ---------------------------------------------------------------------------
@@ -2374,22 +2261,10 @@ def triangle_supports(
 #: removed set → empty decrement join → identical scored table), so a
 #: window that overshoots converges to the same values; the boundary
 #: test n_rows == n_kept is exactly the old per-round n_removed == 0.
-#: The same window pattern drives every r11-unrolled iterative loop
-#: whose convergence certificate is window-safe (monotone sums for the
-#: CC variants, idempotent-at-fixpoint peels here and in kcore).
+#: The same window pattern drives the k-core and MIS loops
+#: (ITER_UNROLL), whose peels are also idempotent at the fixpoint.
 TRUSS_UNROLL = 4
 ITER_UNROLL = TRUSS_UNROLL
-#: window size for the monotone-sum CC loops (min-label, hook+
-#: shortcut). 1 by default = the r10 per-round shape: near-dup
-#: graphs have tiny diameters, so these loops converge in a handful
-#: of rounds and the window's overshoot no-op rounds (each a real
-#: join+agg stage chain) cost more than the saved boundary
-#: aggregates — measured r11 A/B at sf0.1: U=1 beats U=4 by ~20 % on
-#: x_dedup_components_sc/_auto and is never worse. Raise for
-#: deep-diameter graphs where per-round driver barriers dominate
-#: (the window algebra is already in place and value-exact at any
-#: size).
-CC_UNROLL = 1
 
 
 def _peel_round(scored: DataFrame, thr: int) -> DataFrame:
@@ -3645,29 +3520,29 @@ def duplicate_components_shortcut(
     max_iterations: int = 60,
 ) -> DataFrame:
     """Connected components via hook + pointer-doubling shortcut
-    (Shiloach & Vishkin 1982; the "two-phase" MapReduce form of
-    Kiveris et al. 2014): same contract as
+    (Shiloach & Vishkin 1982): same contract as
     :func:`duplicate_components` — DataFrame[doc_id, component_id],
     component_id = min doc id — in O(log n) rounds with LINEAR
     per-round state.
 
-    This is the fourth CC implementation, and it exists because the
-    other poly-log ones each concede something measured: min-label
-    propagation needs diameter rounds (refuses long chains), star
-    contraction is O(log² n) rounds, and Hash-to-Min's member sets
-    blow up to ~n·d/2 rows mid-convergence on paths (STRESS.md r6 —
-    OOM at 100k chain nodes). Here the state is exactly ONE (v,
-    parent) row per vertex plus the static edge list: each round (1)
-    HOOKS every vertex to the minimum parent in its closed
-    neighborhood (one edges⋈parents join + min agg) and (2)
-    SHORTCUTS parent ← parent(parent) (one parents self-join), so
-    labels travel ~2^r hops after r rounds — O(log d) rounds like
-    Hash-to-Min, linear state like star contraction. Chain A/B in
-    STRESS.md r6. Every parent value is itself a vertex id, so the
-    shortcut self-join is total; fixpoint (no parent changed) implies
-    parents are constant per component and equal to the component
-    min (hook would fire across any unequal edge, shortcut across any
-    unequal chain). ``localCheckpoint`` per round resets lineage
+    It exists because the other CC bodies each concede something
+    measured: min-label propagation needs diameter rounds (refuses
+    long chains), and Hash-to-Min's member sets blow up to ~n·d/2
+    rows mid-convergence on paths (STRESS.md r6 — OOM at 100k chain
+    nodes). Here the state is exactly ONE (v, parent) row per vertex
+    plus the static edge list: each round (1) HOOKS every vertex to
+    the minimum parent in its closed neighborhood (one edges⋈parents
+    join + min agg) and (2) SHORTCUTS parent ← parent(parent) (one
+    parents self-join), so labels travel ~2^r hops after r rounds —
+    O(log d) rounds like Hash-to-Min, linear state like
+    :func:`duplicate_components_twophase`. Chain A/B in STRESS.md r6.
+    Every parent value is itself a vertex id, so the shortcut
+    self-join is total; fixpoint (no parent changed) implies parents
+    are constant per component and equal to the component min (hook
+    would fire across any unequal edge, shortcut across any unequal
+    chain). Self-loop pairs stay in the edge list (their hook is a
+    no-op), so a doc that appears only in ``(d, d)`` still gets the
+    label ``d``. ``localCheckpoint`` per round resets lineage
     (iterative-loop rule); raises if the bound is exhausted rather
     than returning partial labels."""
     edges = (
@@ -3675,7 +3550,6 @@ def duplicate_components_shortcut(
         .union(
             pairs.select(F.col(doc_b).alias("v"), F.col(doc_a).alias("u"))
         )
-        .where(F.col("v") != F.col("u"))
         .distinct()
         # lazy: round 1's parent-sum aggregate materializes both
         .localCheckpoint(eager=False)
@@ -3690,54 +3564,45 @@ def duplicate_components_shortcut(
     # replaces p by p(p) ≤ p (the p(x) ≤ x invariant holds inductively
     # from p=v), so every parent is monotone non-increasing and "no
     # parent changed" ⟺ "Σp unchanged" — one shuffle-free
-    # DECIMAL(38,0) aggregate. r11: rounds chain lazily in windows of
-    # CC_UNROLL with one boundary aggregate (same monotone-sum
-    # certificate across the whole window; overshoot rounds are
-    # no-ops); superseded window states unpersist after the boundary
-    # materializes the chain.
+    # DECIMAL(38,0) aggregate per round, which also materializes the
+    # round's lazy checkpoint; the superseded state unpersists after.
     prev_sum = None
-    rounds_done = 0
-    while rounds_done < max_iterations:
-        olds = []
-        for _ in range(min(CC_UNROLL, max_iterations - rounds_done)):
-            nbr_min = (
-                edges.join(
-                    parents.select(
-                        F.col("v").alias("u"), F.col("p").alias("pu")
-                    ),
-                    "u",
-                )
-                .groupBy("v")
-                .agg(F.min("pu").alias("nm"))
+    for _ in range(max_iterations):
+        nbr_min = (
+            edges.join(
+                parents.select(
+                    F.col("v").alias("u"), F.col("p").alias("pu")
+                ),
+                "u",
             )
-            hooked = (
-                parents.join(nbr_min, "v", "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("p"), F.coalesce("nm", F.col("p"))
-                    ).alias("p"),
-                )
+            .groupBy("v")
+            .agg(F.min("pu").alias("nm"))
+        )
+        hooked = (
+            parents.join(nbr_min, "v", "left")
+            .select(
+                "v",
+                F.least(F.col("p"), F.coalesce("nm", F.col("p"))).alias(
+                    "p"
+                ),
             )
-            shortcut = (
-                hooked.alias("a")
-                .join(
-                    hooked.select(
-                        F.col("v").alias("p"), F.col("p").alias("pp")
-                    ).alias("b"),
-                    "p",
-                )
-                .select(F.col("a.v").alias("v"), F.col("pp").alias("p"))
-                .localCheckpoint(eager=False)
+        )
+        shortcut = (
+            hooked.alias("a")
+            .join(
+                hooked.select(
+                    F.col("v").alias("p"), F.col("p").alias("pp")
+                ).alias("b"),
+                "p",
             )
-            olds.append(parents)
-            parents = shortcut
-            rounds_done += 1
-        new_sum = parents.agg(
+            .select(F.col("a.v").alias("v"), F.col("pp").alias("p"))
+            .localCheckpoint(eager=False)
+        )
+        new_sum = shortcut.agg(
             F.sum(F.col("p").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
-        for o in olds:
-            o.unpersist()
+        parents.unpersist()
+        parents = shortcut
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -3761,15 +3626,17 @@ def duplicate_components_twophase(
     alternation (Kiveris et al. 2014, "Connected Components in
     MapReduce and Beyond", Alg. 3): same contract as
     :func:`duplicate_components` — DataFrame[doc_id, component_id],
-    component_id = min doc id.
+    component_id = min doc id — in O(log² n) rounds on ANY graph
+    shape, where min-label propagation needs diameter rounds. Both
+    ``x_dedup_components_star`` and ``x_dedup_components_2p`` run it.
 
-    The fifth CC implementation, and the one whose PER-ROUND cost
-    SHRINKS: unlike hook+shortcut (which joins the STATIC edge list
-    against parents every round — the measured 58%-of-wall/72%-of-
-    shuffle stage of the 10M-doc composed pipeline, STRESS.md r8),
-    both phases here rewrite the edge list itself, and as stars form
-    the rewritten list collapses toward one (node, root) edge per
-    node — so round r+1 shuffles the CONTRACTED graph, not the input.
+    Its PER-ROUND cost SHRINKS: unlike hook+shortcut (which joins the
+    STATIC edge list against parents every round — the measured
+    58%-of-wall/72%-of-shuffle stage of the 10M-doc composed pipeline,
+    STRESS.md r8), both phases here rewrite the edge list itself, and
+    as stars form the rewritten list collapses toward one (node, root)
+    edge per node — so round r+1 shuffles the CONTRACTED graph, not
+    the input.
 
     - **large-star** (per node u, over ALL neighbors): emit
       (w, min(Γ⁺(u))) for every neighbor w > u — strictly-larger
@@ -3780,24 +3647,30 @@ def duplicate_components_twophase(
 
     Both emissions preserve connectivity and never raise the
     component minimum (each new edge connects two nodes through a
-    current common neighbor); at fixpoint the edge set is a star
-    forest rooted at component minima, read out as
-    (member, root) ∪ (root, root). Fixpoint = the canonical edge set
-    stops changing (exact set equality via two anti-join counts —
-    edge counts alone can coincide). ``localCheckpoint`` per round
-    resets lineage; raises on bound exhaustion rather than returning
-    partial labels."""
-    edges = (
-        pairs.select(F.col(doc_a).alias("a"), F.col(doc_b).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"),
-            F.greatest("a", "b").alias("hi"),
+    current common neighbor). Edges stay canonical (lo < hi), so
+    neither phase needs a re-symmetrising or re-orienting
+    ``distinct``.
+
+    Fixpoint: the loop stops as soon as the new edge list is a star
+    forest — every ``hi`` has exactly one ``lo`` and no ``lo`` is
+    also a ``hi``. Both phases map a star forest to itself, and a
+    star's centre is its component minimum, so the test is exact and
+    needs no repeat round to see that nothing changed; it is one
+    aggregate over the new edges, which also materializes the round's
+    lazy ``localCheckpoint``. The read-out is (hi, lo) for every leaf
+    and (d, d) for every centre and every doc seen only in self-loop
+    pairs. Raises on bound exhaustion rather than returning partial
+    labels."""
+    base = (
+        pairs.select(
+            F.least(doc_a, doc_b).alias("lo"),
+            F.greatest(doc_a, doc_b).alias("hi"),
         )
         .distinct()
-        # lazy: round 1's symmetric-difference count materializes it
+        # lazy: round 1's star-forest test materializes it
         .localCheckpoint(eager=False)
     )
+    edges = base.where(F.col("lo") != F.col("hi"))
 
     def large_star(e: DataFrame) -> DataFrame:
         # bidirect, group by center u over all neighbors
@@ -3812,7 +3685,6 @@ def duplicate_components_twophase(
             nbrs.join(m, "u")
             .where(F.col("w") > F.col("u"))
             .select(F.col("m").alias("lo"), F.col("w").alias("hi"))
-            .where(F.col("lo") != F.col("hi"))
             .distinct()
         )
 
@@ -3825,7 +3697,8 @@ def duplicate_components_twophase(
             "lo", "hi", "m"
         )
         # emit (w, m) for w in Γ⁻(u) ∪ {u} − {m}: the smaller
-        # neighbors (excluding m itself) plus the center u
+        # neighbors (excluding m itself) plus the center u; m < w in
+        # both, so the emitted edges are canonical
         from_small = (
             withm.where(F.col("lo") != F.col("m"))
             .select(F.col("m").alias("lo"), F.col("lo").alias("hi"))
@@ -3833,49 +3706,50 @@ def duplicate_components_twophase(
         from_center = withm.select(
             F.col("m").alias("lo"), F.col("hi").alias("hi")
         )
-        return (
-            from_small.union(from_center)
-            .where(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
+        return from_small.union(from_center).distinct()
 
     for _ in range(max_iterations):
-        # LAZY checkpoint; the symmetric-difference count below is the
-        # materializing action. One full-outer join + count replaces
-        # the r9 shape's eager checkpoint + TWO anti-join counts
-        # (3 jobs → 1 per round, same exact set-equality test — edge
-        # counts alone can coincide, a one-sided anti-join can miss
-        # disappearances, but a row with either side NULL is exactly
-        # the symmetric difference). Guide §1.2: remove passes.
         new_edges = small_star(large_star(edges)).localCheckpoint(
             eager=False
         )
-        diff = (
-            new_edges.select("lo", "hi", F.lit(1).alias("_n"))
-            .join(
-                edges.select("lo", "hi", F.lit(1).alias("_o")),
-                ["lo", "hi"],
-                "full_outer",
+        # per node: h = times it is a hi, d = its degree; a node breaks
+        # the star forest iff it is a hi and has a second edge
+        ends = new_edges.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("lo").alias("n"), F.lit(0).alias("h")),
+                    F.struct(F.col("hi").alias("n"), F.lit(1).alias("h")),
+                )
             )
-            .where(F.col("_n").isNull() | F.col("_o").isNull())
+        )
+        n_bad = (
+            ends.groupBy("n")
+            .agg(F.sum("h").alias("h"), F.count("*").alias("d"))
+            .where((F.col("h") > 0) & (F.col("d") > 1))
             .count()
         )
         edges.unpersist()
         edges = new_edges
-        if diff == 0:
+        if n_bad == 0:
             break
     else:
         raise RuntimeError(
             f"duplicate_components_twophase did not converge in "
             f"{max_iterations} rounds"
         )
-    members = edges.select(
-        F.col("hi").alias("doc_id"), F.col("lo").alias("component_id")
+    loops = base.where(F.col("lo") == F.col("hi")).select(
+        F.col("lo").alias("doc_id"), F.col("lo").alias("component_id")
     )
-    roots = edges.select(F.col("lo").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("component_id")
+    # min per doc: a leaf's centre beats its own (d, d) self-loop row
+    return (
+        edges.select(
+            F.col("hi").alias("doc_id"), F.col("lo").alias("component_id")
+        )
+        .union(edges.select(F.col("lo").alias("doc_id"), "lo"))
+        .union(loops)
+        .groupBy("doc_id")
+        .agg(F.min("component_id").alias("component_id"))
     )
-    return members.union(roots)
 
 
 def duplicate_components_auto(
@@ -3927,7 +3801,8 @@ def duplicate_components_htm(
     DataFrame[doc_id, component_id], component_id = min doc id — but
     converging in O(log n) rounds on ANY graph shape, including the
     long chains where min-label propagation needs diameter rounds and
-    without the per-round double-join of the star-contraction variant.
+    without the per-round double-join of the large-star/small-star
+    variant (:func:`duplicate_components_twophase`).
 
     State is the cluster relation (v, member): each node starts with
     itself + its neighbors. Per round every node v with m = min(C_v)
@@ -3947,13 +3822,14 @@ def duplicate_components_htm(
     not stay linear: every node's member set doubles per round until
     it collapses (~min(2^r, d) members), so total state peaks at
     ~n·d/2 rows mid-convergence (63.2M rows from a 20k-node input;
-    Java-heap OOM at 100k nodes), and wall-clock loses to star
-    contraction 210 s vs 17 s there. Use HTM where its state premise
-    holds — bounded-diameter cluster graphs like near-dup components,
-    its registered workload (`x_dedup_components_htm`) — and
+    Java-heap OOM at 100k nodes), and wall-clock loses to
+    large-star/small-star contraction 210 s vs 17 s there. Use HTM
+    where its state premise holds — bounded-diameter cluster graphs
+    like near-dup components, its registered workload
+    (`x_dedup_components_htm`) — and
     :func:`duplicate_components_shortcut` (O(log n) rounds AND linear
     state — 8.4 s / 18.2 s on the same 20k / 100k chains) or
-    :func:`duplicate_components_star` for unknown or adversarial
+    :func:`duplicate_components_twophase` for unknown or adversarial
     diameters."""
     edges = (
         pairs.select(F.col(doc_a).alias("v"), F.col(doc_b).alias("m"))
@@ -4024,8 +3900,8 @@ def duplicate_components_htm(
                 "relation — the long-path regime where Hash-to-Min's "
                 "communication is super-linear. Use "
                 "duplicate_components_shortcut (O(log n) rounds, "
-                "linear state) or duplicate_components_star instead, "
-                "or raise max_state_factor if memory allows."
+                "linear state) or duplicate_components_twophase "
+                "instead, or raise max_state_factor if memory allows."
             )
         mins = grp.select("v", "mn")
         if row["minsum"] == prev_minsum:

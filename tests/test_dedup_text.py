@@ -417,14 +417,15 @@ def test_duplicate_components_vs_union_find(spark):
 
 
 def test_duplicate_components_star_matches_minlabel(spark):
-    """Star contraction vs min-label propagation vs union-find on
-    adversarial graph shapes (chains are the star algorithm's reason to
-    exist: diameter >> log² n)."""
+    """Large-star/small-star contraction (the body behind
+    x_dedup_components_star) vs min-label propagation on adversarial
+    graph shapes (chains are the star algorithm's reason to exist:
+    diameter >> log² n)."""
     import random
 
     from big_data_computing__spark.operators.dedup import (
         duplicate_components,
-        duplicate_components_star,
+        duplicate_components_twophase,
     )
 
     rng = random.Random(11)
@@ -440,7 +441,7 @@ def test_duplicate_components_star_matches_minlabel(spark):
         )
         a = {
             (r["doc_id"], r["component_id"])
-            for r in duplicate_components_star(df).collect()
+            for r in duplicate_components_twophase(df).collect()
         }
         b = {
             (r["doc_id"], r["component_id"])
@@ -455,14 +456,14 @@ def test_duplicate_components_star_raises_without_convergence(spark):
     import pytest
 
     from big_data_computing__spark.operators.dedup import (
-        duplicate_components_star,
+        duplicate_components_twophase,
     )
 
     df = spark.createDataFrame(
         [(int(i), int(i + 1)) for i in range(40)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not reach"):
-        duplicate_components_star(df, max_iterations=1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_components_twophase(df, max_iterations=1)
 
 
 def test_simhash_xxhash64_production_mode(spark, docs):
@@ -1362,36 +1363,51 @@ def test_vocab_coverage_hand_computed(spark):
 
 
 def test_components_htm_agrees_with_other_two_impls(spark):
-    """Four independent CC implementations (min-label propagation,
-    star contraction, hash-to-min, hook+shortcut pointer doubling)
-    must produce identical labelings on an adversarial mix: a 30-node
-    chain (diameter stress), two dense clusters, and isolated
-    pairs."""
+    """Every CC body (min-label propagation, large-star/small-star,
+    hash-to-min, hook+shortcut pointer doubling) and the dispatcher on
+    both of its branches must produce the labeling of the DuckDB
+    recursive-CTE oracle on an adversarial mix: a 30-node chain
+    (diameter stress), two dense clusters, isolated pairs, and
+    self-loop pairs — one on a chain node, one on a doc that appears
+    in no other pair and so must still be labelled by itself."""
+    import duckdb
+
     from big_data_computing__spark.operators.dedup import (
         duplicate_components,
+        duplicate_components_auto,
         duplicate_components_htm,
         duplicate_components_shortcut,
-        duplicate_components_star,
+        duplicate_components_sql,
+        duplicate_components_twophase,
     )
 
     chain = [(i, i + 1) for i in range(100, 130)]
     dense = [(200, x) for x in range(201, 206)] + [(202, 204)]
     dense2 = [(300, 301), (301, 302), (300, 302)]
     lone = [(400, 401), (500, 501)]
-    pairs = spark.createDataFrame(
-        chain + dense + dense2 + lone, "doc_a long, doc_b long"
-    )
+    loops = [(600, 600), (100, 100)]
+    rows = chain + dense + dense2 + lone + loops
+    pairs = spark.createDataFrame(rows, "doc_a long, doc_b long")
 
     def lab(df):
         return {
             (r["doc_id"], r["component_id"]) for r in df.collect()
         }
 
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pairs (doc_a BIGINT, doc_b BIGINT)")
+    con.executemany("INSERT INTO pairs VALUES (?, ?)", rows)
+    sql = duplicate_components_sql("SELECT * FROM pairs")
+    want = set(con.execute(sql).fetchall())
+    assert (600, 600) in want
+
     a = lab(duplicate_components(pairs))
-    b = lab(duplicate_components_star(pairs))
+    b = lab(duplicate_components_twophase(pairs))
     c = lab(duplicate_components_htm(pairs))
     d = lab(duplicate_components_shortcut(pairs))
-    assert a == b == c == d
+    e = lab(duplicate_components_auto(pairs))
+    f = lab(duplicate_components_auto(pairs, edge_threshold=0))
+    assert a == b == c == d == e == f == want
     # spot-check the chain collapsed to one component rooted at 100
     assert (129, 100) in c and (115, 100) in c
 
@@ -2530,10 +2546,10 @@ def test_incremental_probe_super_bucket_guard(spark, boilerplate_docs):
 
 
 def test_components_twophase_random_graphs_vs_union_find(spark, sf_dir):
-    """The large-star/small-star alternation (fifth CC implementation)
-    against a Python union-find ground truth on the same seeded case
-    family as the shortcut test, plus the fixture pair graph against
-    the shortcut labels (mismatch count must be exactly zero)."""
+    """The large-star/small-star alternation against a Python
+    union-find ground truth on the same seeded case family as the
+    shortcut test, plus the fixture pair graph against the shortcut
+    labels (mismatch count must be exactly zero)."""
     import random
 
     from big_data_computing__spark.operators.dedup import (

@@ -59,7 +59,7 @@ def cc_chain_ab(n_nodes: int = 20_000, hop: int = 5_000) -> None:
                 p, max_state_factor=100_000
             ),
         ),
-        ("star_cc_chain", dd.duplicate_components_star),
+        ("star_cc_chain", dd.duplicate_components_twophase),
         ("shortcut_cc_chain", dd.duplicate_components_shortcut),
     ):
         t0 = time.time()
@@ -368,7 +368,7 @@ def main() -> None:
         .repartition(64)
     )
     t0 = time.time()
-    n_nodes = dd.duplicate_components_star(chains).count()
+    n_nodes = dd.duplicate_components_twophase(chains).count()
     results["star_cc_100k_chain"] = {
         "nodes": n_nodes,
         "sec": round(time.time() - t0, 1),
