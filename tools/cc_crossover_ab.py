@@ -14,7 +14,8 @@ Inputs (the positional argument):
   edges from 73k junk docs at n_docs=730k — the exact pathology
   lsh_max_bucket_from_stats guards against). Edge count scales
   ≈ 1.4 × n_docs after the filter, so n_docs ≈ 730k lands near 10⁶
-  edges and n_docs ≈ 73k near 10⁵;
+  edges; smaller corpora give fewer edges per doc (73k → 63,925 edges,
+  120k → 105,360);
 - a fixture directory (e.g. ``testdata/sf0.01``): the MinHash pairs of
   its ``documents`` table — the graph the registered
   ``x_dedup_components_*`` queries close;
