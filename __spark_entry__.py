@@ -537,7 +537,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def x_streaming_mg_final(spark, sf_dir):
         # Misra-Gries stream-end EXACT heavy hitters: fold each
         # micro-batch's per-partition MG summaries into the driver
-        # state (the mg_stream_query foreachBatch body), then the
+        # state (a foreachBatch fold into MgSummaryState), then the
         # exact recount over the arrived union restricted to the
         # state's candidate superset — the two-pass guarantee holds
         # per prefix because candidates() only ever over-approximates

@@ -35,11 +35,6 @@ def sq_dist_2d(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2)
 
 
-def dist_2d(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    """Euclidean distance between two 2-D points."""
-    return F.sqrt(sq_dist_2d(x1, y1, x2, y2))
-
-
 def sq_dist_vec(a: Column, b: Column) -> Column:
     """Squared Euclidean distance between two array<double> vectors.
 

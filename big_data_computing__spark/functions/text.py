@@ -21,14 +21,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def _safe_range(k: Column) -> Column:
-    """sequence(1, k), empty when k < 1 (Spark's sequence(1, 0) would
-    otherwise produce a *descending* [1, 0])."""
-    return F.when(k >= 1, F.sequence(F.lit(1), k)).otherwise(
-        F.array().cast("array<int>")
-    )
-
-
 def _bind_once(arr: Column, build) -> Column:
     """Evaluate the array expression ``arr`` ONCE per row and hand the
     result to ``build`` as a bound lambda variable (r10, guide §1.2 /

@@ -159,8 +159,3 @@ def dot_vec(a: Column, b: Column) -> Column:
 def norm(a: Column) -> Column:
     """L2 norm of an array<double> column."""
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<double> columns."""
-    return dot(a, b) / (norm(a) * norm(b))

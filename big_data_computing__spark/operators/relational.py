@@ -26,26 +26,6 @@ def top_k(df: DataFrame, k: int, *order: Column) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def membership_flags(
-    df: DataFrame,
-    truth: DataFrame,
-    on: str,
-    flag_col: str = "flag",
-) -> DataFrame:
-    """Annotate rows `+`/`-` by key membership in `truth` (the reference's
-    report diffing, big_data_computing_3.py:124-137; J4). Broadcast left
-    join — truth is the small side by construction."""
-    t = truth.select(F.col(on)).distinct().withColumn("_hit", F.lit(True))
-    return (
-        df.join(F.broadcast(t), on, "left")
-        .withColumn(
-            flag_col,
-            F.when(F.col("_hit"), F.lit("+")).otherwise(F.lit("-")),
-        )
-        .drop("_hit")
-    )
-
-
 def star_join(
     fact: DataFrame, dims: list[tuple[DataFrame, str]]
 ) -> DataFrame:
@@ -56,13 +36,6 @@ def star_join(
     for dim, key in dims:
         out = out.join(F.broadcast(dim), key)
     return out
-
-
-def grouped_count(df: DataFrame, *keys: str) -> DataFrame:
-    """groupBy(keys).count() with map-side partial aggregation (Catalyst
-    HashAggregateExec partial+final — subsumes the reference's hand-rolled
-    combiner, big_data_computing_1.py:67-75)."""
-    return df.groupBy(*keys).agg(F.count("*").alias("cnt"))
 
 
 def distinct_count(df: DataFrame, col: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import hash60, hash60_sql
+from ..functions.hashing import hash60
 from ..functions.vectors import as_double_vec, block_dot, dot, dot_vec, norm
 
 
@@ -418,33 +418,6 @@ def cosine_near_pairs_blocked(
     return pairs.select(
         "vec_a", "vec_b", F.round(F.col("raw"), 6).alias("score")
     ).where(F.col("score") >= F.lit(threshold))
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    method: str = "auto",
-    blocked_threshold: int = 50_000,
-    **blocked_kwargs,
-) -> DataFrame:
-    """Cost-gated entry point for embedding near-dup pairs.
-
-    'blocked' (:func:`cosine_near_pairs_blocked`) pays a fixed quantizer
-    cost (MRFFT + assignment, ~15 s locally) that only amortizes above
-    ~50k vectors; below that the brute crossJoin is both exact and
-    faster. ``method='auto'`` picks by corpus size — the same explicit
-    cost gate the reference applies to its exact outlier scan
-    (big_data_computing_1.py:178). Both paths produce identical output.
-    """
-    if method == "auto":
-        method = (
-            "brute" if emb.count() <= blocked_threshold else "blocked"
-        )
-    if method == "brute":
-        return cosine_near_pairs(emb, threshold)
-    if method == "blocked":
-        return cosine_near_pairs_blocked(emb, threshold, **blocked_kwargs)
-    raise ValueError(f"unknown method {method!r}")
 
 
 def cosine_near_pairs_sql(threshold: float = 0.9) -> str:
@@ -3044,16 +3017,6 @@ codes AS (
   FROM d JOIN st USING (dim)
   GROUP BY d.vec_id, (d.dim - 1) // {_BQ_WORD_BITS}
 )"""
-
-
-def embedding_binary_codec_sql(
-    dims: int = 64, scale: int = 1_000_000
-) -> str:
-    """DuckDB twin of :func:`embedding_binary_codec`."""
-    return f"""
-WITH {_binary_code_cte(dims, scale)}
-SELECT vec_id, word, wv FROM codes
-"""
 
 
 def hamming_topk_sql(

@@ -24,6 +24,13 @@ from pyspark.sql import SparkSession
 
 ENGINE_NAME = "big_data_computing__spark"
 
+# The directory holding this package. Python workers get it on their
+# PYTHONPATH, because a caller that found the package only through its
+# own ``sys.path`` passes nothing the workers could import it from.
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 
 def get_session(
     app_name: str = ENGINE_NAME,
@@ -61,6 +68,8 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # merged by PySpark's worker factory into each worker's path
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # UTC pins TIMESTAMP_NTZ→TIMESTAMP casts and timestamp literals so
         # event-time arithmetic matches DuckDB's epoch_us exactly
         .config("spark.sql.session.timeZone", "UTC")

@@ -489,87 +489,6 @@ def _table_data_write(
         _zorder3_data_write(df, path, (x, y, zcol), n_files, cell, bits)
 
 
-def write_zordered3(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str, str] = ("x", "y", "z"),
-    n_files: int = 16,
-    cell: float = 1.0,
-    bits: int = 20,
-) -> list[dict]:
-    """3-column Z-order layout: files clustered by the 3-D Morton key
-    (``operators/outliers.zorder_key3``) of the ``cell``-quantized
-    coordinates, plus a manifest with per-file min/max for ALL THREE
-    columns — the ``OPTIMIZE ZORDER BY (x, y, z)`` shape. A
-    lexicographic sort on three columns prunes only the leading one;
-    this layout gives every axis usable stats."""
-    a, b, c = cols
-    _zorder3_data_write(df, path, cols, n_files, cell, bits)
-    entries = _file_stats(df.sparkSession, path, a, b, (c,))
-    with open(os.path.join(path, MANIFEST_NAME), "w") as fh:
-        json.dump(
-            {"x": a, "y": b, "cols": [c], "files": entries}, fh, indent=1
-        )
-    return entries
-
-
-def read_pruned3(
-    spark: SparkSession,
-    path: str,
-    ranges: tuple[tuple[float, float], ...],
-    cols: tuple[str, str, str] = ("x", "y", "z"),
-) -> tuple[DataFrame, int, int]:
-    """3-D range query planned through the 3-column manifest: returns
-    (result with exact residual filter, n_files_read, n_files_total).
-    The third column's stats live under ``min_<col>``/``max_<col>``
-    (the multi-column stats convention)."""
-    with open(os.path.join(path, MANIFEST_NAME)) as fh:
-        manifest = json.load(fh)
-    a, b, c = cols
-    keys = ["x", "y", c]
-    keep = [
-        e["file"]
-        for e in manifest["files"]
-        if all(
-            e[f"max_{k}"] >= lo and e[f"min_{k}"] <= hi
-            for k, (lo, hi) in zip(keys, ranges)
-        )
-    ]
-    total = len(manifest["files"])
-    pred = None
-    for col, (lo, hi) in zip(cols, ranges):
-        p = (F.col(col) >= lo) & (F.col(col) <= hi)
-        pred = p if pred is None else (pred & p)
-    if not keep:
-        df = spark.read.parquet(path).where(F.lit(False))
-        return df, 0, total
-    return spark.read.parquet(*keep).where(pred), len(keep), total
-
-
-def write_lexicographic3(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str, str] = ("x", "y", "z"),
-    n_files: int = 16,
-) -> list[dict]:
-    """3-column comparison layout: contiguous (a, b, c)-lexicographic
-    ranges — trailing-column stats are useless for pruning. Same
-    3-column manifest contract as :func:`write_zordered3`."""
-    a, b, c = cols
-    (
-        df.repartitionByRange(n_files, a, b, c)
-        .sortWithinPartitions(a, b, c)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    entries = _file_stats(df.sparkSession, path, a, b, (c,))
-    with open(os.path.join(path, MANIFEST_NAME), "w") as fh:
-        json.dump(
-            {"x": a, "y": b, "cols": [c], "files": entries}, fh, indent=1
-        )
-    return entries
-
-
 def write_lexicographic(
     df: DataFrame,
     path: str,
@@ -3864,22 +3783,4 @@ def scd2_merge(
     )
     return table.upsert(
         spark, out, n_files=n_files, extra_meta=extra_meta
-    )
-
-
-def scd2_as_of(
-    table: ZTable, spark: SparkSession, ts_us: int
-) -> DataFrame:
-    """Point-in-time view of an SCD2 ZTable: the version of every
-    entity that was valid at ``ts_us`` (half-open [valid_from,
-    valid_to) intervals; entities first seen later are absent).
-    Equivalent to filtering :func:`~big_data_computing__spark
-    .operators.windows.scd2_history` of the full stream — pinned in
-    tests."""
-    return table.read(spark).where(
-        (F.col(table.y) <= F.lit(int(ts_us)))
-        & (
-            F.col("valid_to_us").isNull()
-            | (F.col("valid_to_us") > F.lit(int(ts_us)))
-        )
     )

@@ -180,32 +180,3 @@ def lsh_dedup_stream_query(
         .trigger(availableNow=True)
         .start(**foreach_kwargs)
     )
-
-
-def dedup_stream_within_watermark(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """First-seen documents with KEY-ONLY dedup semantics AND bounded
-    state — ``dropDuplicatesWithinWatermark`` (SPARK-42931), the
-    operator :func:`dedup_stream`'s watermarked path cannot imitate.
-
-    The plain path must include ``ts_col`` in the dedup key (Spark
-    requires the watermark column in ``dropDuplicates`` keys for state
-    eviction), so a duplicate that arrives with a DIFFERENT event time
-    — a re-crawl of the same page, a re-delivered message restamped by
-    the broker — slips through it. Here the key is the fingerprint
-    alone: any duplicate arriving within the watermark delay of the
-    first sighting drops, whatever its event time; state still evicts
-    at the watermark horizon. The trade stays the documented one:
-    duplicates separated by MORE than the delay re-emit (bounded
-    state has to forget — pinned in tests/test_dedup_stream.py).
-    """
-    fp = docs.withColumn(
-        "fingerprint", hash60(normalized(F.col(text_col)))
-    )
-    return fp.withWatermark(
-        ts_col, watermark_delay
-    ).dropDuplicatesWithinWatermark(["fingerprint"])

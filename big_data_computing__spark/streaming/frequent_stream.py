@@ -26,7 +26,6 @@ Mapping (SURVEY.md §2.9):
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -336,32 +335,6 @@ class MgSummaryState:
         """Superset of every item with count > n/k over the arrived
         prefix — the first pass of the exact two-pass heavy hitters."""
         return set(self.counters)
-
-
-def mg_stream_query(
-    stream: DataFrame,
-    state: MgSummaryState,
-    checkpoint_dir: str,
-    item_col: str = "item",
-) -> StreamingQuery:
-    """foreachBatch driver: per-partition MG summaries on the cluster,
-    O(k · n_partitions) rows to the driver, one state merge."""
-    from ..operators.frequent import mg_partition_summaries
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        summ = mg_partition_summaries(
-            batch_df, state.k, item_col
-        ).collect()
-        state.fold(
-            summ, n_rows=batch_df.count(), batch_id=batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 class F2State:

@@ -1,14 +1,13 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
-
-The distributed alternative to the driver-held SamplerState
-(frequent_stream.py): state lives per-key inside Spark's state store —
-partitioned, checkpointed, and scalable to key cardinalities no driver
-dict could hold. This is the engine's pattern for any custom stateful
-operator the built-in streaming aggregations can't express.
+"""Stateful streaming helpers: per-key state via applyInPandasWithState,
+and a start helper that sizes state partitions to the task slots.
 
 `running_item_counts` is the reference's exact-counts dict
 (big_data_computing_3.py:84-88) as per-key state: each micro-batch
 updates the per-item count and emits the new value (update semantics).
+The state lives in Spark's state store, partitioned and checkpointed,
+so it scales to key cardinalities no driver dict could hold. The HW3
+reservoir and sticky samplers keep their state on the driver instead,
+as the reference does (``frequent_stream.py::SamplerState``).
 
 `start_stateful` starts a stateful query with one state partition per
 task slot instead of the session's batch shuffle-partition count.
@@ -94,151 +93,6 @@ def running_item_counts(items: DataFrame) -> DataFrame:
         _update_counts,
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-_TRANS_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("prev_type", T.StringType()),
-        T.StructField("next_type", T.StringType()),
-    ]
-)
-
-_TRANS_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_us", T.LongType()),
-        T.StructField("last_id", T.LongType()),
-        T.StructField("last_type", T.StringType()),
-    ]
-)
-
-
-def _update_transitions(
-    key: Any,
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    rows = pd.concat(list(batches), ignore_index=True)
-    rows = rows.sort_values(["u", "event_id"])
-    last_type = None
-    last_us = last_id = 0
-    if state.exists:
-        last_us, last_id, last_type = state.get
-    prevs: list[str] = []
-    nexts: list[str] = []
-    for r in rows.itertuples():
-        if last_type is not None:
-            prevs.append(last_type)
-            nexts.append(r.event_type)
-        last_type, last_us, last_id = r.event_type, int(r.u), int(r.event_id)
-    state.update((last_us, last_id, last_type))
-    yield pd.DataFrame({"prev_type": prevs, "next_type": nexts})
-
-
-def streaming_transitions(events: DataFrame) -> DataFrame:
-    """Streaming twin of ``windows.event_transitions``: per-user state
-    holds only the LAST event (time, id, type); each micro-batch emits
-    the (prev_type, next_type) pairs its new events close, including
-    the cross-batch pair against the stored last event. Aggregating the
-    emitted pairs over a full ordered replay equals the batch transition
-    matrix bit-for-bit (asserted in tests).
-
-    Arrival-order contract: per-user event order across micro-batches
-    must follow event time (the same in-order assumption every
-    replay-parity twin in streaming/ documents); within a batch events
-    are sorted by (micros, event_id) before pairing, so intra-batch
-    ordering is free. State is O(1) per user — the smallest possible
-    footprint for a first-order Markov stream.
-
-    ``events`` must carry user_id, event_id, event_type, and ``u``
-    (event-time micros, e.g. ``windows.event_time_us``).
-    """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_transitions,
-        outputStructType=_TRANS_OUT_SCHEMA,
-        stateStructType=_TRANS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_funnel(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    horizon_us: int = 7 * 86_400_000_000,
-):
-    """Streaming twin of ``windows.funnel_report``: per-user state holds
-    the greedy-minimal completion time of each funnel step (k longs, 0 =
-    not yet completed); each micro-batch advances the user's progress
-    and emits (user_id, completed) in update mode. Counting users with
-    ``completed >= i`` over the final per-user states equals the batch
-    funnel's per-step user counts exactly (asserted in tests).
-
-    Equivalence argument: the batch semantics are greedy-minimal
-    (step 1 anchors at the EARLIEST step-1 event; each later step takes
-    the earliest qualifying occurrence). Under the in-order arrival
-    contract every replay twin in streaming/ documents (per-user event
-    order across micro-batches follows event time; within a batch rows
-    are sorted by (micros, event_id) before processing), the earliest
-    qualifying occurrence is exactly the FIRST qualifying occurrence the
-    greedy scan meets, and a completion time once set can never be
-    improved by later (hence later-in-time) events — so the incremental
-    state equals the batch computation after any prefix of the stream.
-
-    State is O(k) per user — the minimal footprint for a k-step funnel.
-    ``events`` must carry user_id, event_id, event_type, and ``u``
-    (event-time micros, e.g. ``windows.event_time_us``).
-    """
-    if len(steps) < 2:
-        raise ValueError("streaming_funnel: need at least 2 steps")
-    k = len(steps)
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("completed", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField(f"t{i}", T.LongType()) for i in range(1, k + 1)]
-    )
-    step_index = {s: i for i, s in enumerate(steps)}
-
-    def update(
-        key: Any,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user,) = key
-        rows = pd.concat(list(batches), ignore_index=True)
-        rows = rows.sort_values(["u", "event_id"])
-        ts = list(state.get) if state.exists else [0] * k
-        for r in rows.itertuples():
-            i = step_index.get(r.event_type)
-            if i is None or ts[i] != 0:
-                continue
-            u = int(r.u)
-            if i == 0:
-                ts[0] = u
-            elif (
-                ts[i - 1] != 0
-                and u > ts[i - 1]
-                and u <= ts[0] + horizon_us
-            ):
-                ts[i] = u
-        state.update(tuple(ts))
-        completed = 0
-        for t in ts:
-            if t == 0:
-                break
-            completed += 1
-        yield pd.DataFrame({"user_id": [user], "completed": [completed]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

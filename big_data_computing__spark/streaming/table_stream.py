@@ -65,47 +65,6 @@ def table_append_stream(
     )
 
 
-def upsert_batch(
-    table: ZTable, batch_df: DataFrame, batch_id: int, n_files: int = 2
-) -> bool:
-    """Idempotently MERGE one micro-batch (coordinate-keyed upsert —
-    a streaming CDC apply): returns True if committed, False if
-    ``batch_id`` was already in the log. Two idempotence layers: the
-    batch-id guard (same as :func:`append_batch`) makes a replay a
-    strict no-op, and even without it a replayed coordinate-keyed
-    MERGE of the same batch is semantically idempotent (same keys →
-    same replacement rows); the guard keeps the version history clean
-    and the cost zero."""
-    last = last_committed_batch_id(table)
-    if last is not None and batch_id <= last:
-        return False
-    table.upsert(
-        batch_df.sparkSession, batch_df, n_files=n_files,
-        extra_meta={"batch_id": batch_id},
-    )
-    return True
-
-
-def table_upsert_stream(
-    src: DataFrame,
-    table: ZTable,
-    checkpoint_dir: str,
-    n_files: int = 2,
-):
-    """Wire a streaming changefeed into ``table`` as MERGEs: each
-    micro-batch's rows REPLACE existing rows at the same (x, y) and
-    insert otherwise — the streaming upsert/CDC-apply pattern (Delta's
-    foreachBatch-MERGE idiom). Returns the DataStreamWriter; caller
-    picks the trigger and calls .start()."""
-    return (
-        src.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, bid: upsert_batch(table, df, bid, n_files)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 class CdfAggState:
     """Incremental materialized-view maintenance off the change data
     feed: a GROUP-BY-count (and optional integer sum) over the table,
@@ -353,222 +312,6 @@ class CdfJoinAggState:
         )
         want = {r["g"]: (r["cnt"], r["sm"]) for r in full}
         return want == self.state
-
-
-class JoinViewTable:
-    """Row-level incrementally-maintained join view: ``V = A JOIN B
-    USING (key)`` materialized as its OWN ZTable, kept current from the
-    two source tables' change feeds — the denormalization half of the
-    IVM story (:class:`CdfJoinAggState` maintains the aggregate of the
-    join; this maintains the joined ROWS, so downstream consumers scan
-    a pre-joined table instead of re-running the join).
-
-    Identity: ``a_id`` / ``b_id`` must be unique row ids of A and B;
-    the view's LAYOUT COLUMNS are (a_id, b_id), so the coordinate-keyed
-    :meth:`ZTable.upsert` is exact row replacement per joined pair and
-    re-applying a delta is a no-op (replay idempotence). Deletes are
-    merge-on-read: a pair leaving the join is upserted with
-    ``_mult = 0`` and :meth:`read_view` filters ``_mult > 0`` — the
-    same tombstone shape as deletion vectors, compactable later.
-
-    Each :meth:`advance` folds the classic two-term bag-algebra rule
-
-        dV = dA >< B_old  +  A_new >< dB
-
-    (A_new already contains dA, so the cross term is covered), with
-    signed rows from ``ZTable.changes`` and the OLD/NEW snapshots from
-    time travel. An update of a source row (delete+insert at one
-    version) nets to a payload replacement at the same coordinate.
-
-    Scale shape: every advance joins change-volume-sized deltas against
-    one snapshot scan per term, and upserts only affected (a_id, b_id)
-    coordinates — the view is never rebuilt. After any prefix of
-    commits the view equals the full join recompute exactly
-    (:meth:`parity`, the tested contract).
-    """
-
-    def __init__(
-        self,
-        table_a: ZTable,
-        table_b: ZTable,
-        key: str,
-        a_id: str,
-        b_id: str,
-        view_path: str,
-    ):
-        self.a = table_a
-        self.b = table_b
-        self.key = key
-        self.a_id = a_id
-        self.b_id = b_id
-        self.view_path = view_path
-        self.view: ZTable | None = None
-        self.va = 0
-        self.vb = 0
-
-    def _joined(self, spark, va: int, vb: int) -> DataFrame:
-        return self.a.read(spark, version=va).join(
-            self.b.read(spark, version=vb), self.key
-        )
-
-    def _bootstrap(self, spark) -> None:
-        from pyspark.sql import functions as F
-
-        base = self._joined(spark, 0, 0).withColumn(
-            "_mult", F.lit(1).cast("int")
-        )
-        self.view = ZTable.create(
-            base, self.view_path, x=self.a_id, y=self.b_id, n_files=4
-        )
-
-    def _signed_delta(self, spark) -> "DataFrame | None":
-        """Union of the two delta-join terms with a sign column, or
-        None when neither source moved."""
-        from pyspark.sql import functions as F
-
-        sign = F.when(
-            F.col("_change_type") == "insert", F.lit(1)
-        ).otherwise(F.lit(-1))
-        la, lb = self.a.latest_version(), self.b.latest_version()
-        terms = []
-        if la > self.va:
-            d_a = self.a.changes(spark, self.va, la).withColumn(
-                "_sign", sign
-            )
-            terms.append(
-                d_a.join(self.b.read(spark, version=self.vb), self.key)
-            )
-        if lb > self.vb:
-            d_b = self.b.changes(spark, self.vb, lb).withColumn(
-                "_sign", sign
-            )
-            terms.append(
-                self.a.read(spark, version=la).join(d_b, self.key)
-            )
-        self.va, self.vb = la, lb
-        if not terms:
-            return None
-        out = terms[0]
-        for t in terms[1:]:
-            out = out.unionByName(t)
-        return out
-
-    def advance(self, spark) -> int:
-        """Fold all new commits on either source into the view; returns
-        the number of upserted view rows (tombstones included)."""
-        from pyspark.sql import functions as F
-
-        if self.view is None:
-            self._bootstrap(spark)
-        signed = self._signed_delta(spark)
-        if signed is None:
-            return 0
-        row_cols = [
-            c for c in self.view.read(spark).columns if c != "_mult"
-        ]
-        per_row = (
-            signed.groupBy(*[F.col(c) for c in row_cols])
-            .agg(F.sum("_sign").cast("int").alias("_d"))
-            .where(F.col("_d") != 0)
-            .localCheckpoint()
-        )
-        ups = per_row.where(F.col("_d") > 0).select(
-            *row_cols, F.col("_d").alias("_mult")
-        )
-        net = per_row.groupBy(self.a_id, self.b_id).agg(
-            F.sum("_d").alias("_net")
-        )
-        dels = (
-            per_row.where(F.col("_d") < 0)
-            .join(
-                net.where(F.col("_net") < 0).select(self.a_id, self.b_id),
-                [self.a_id, self.b_id],
-            )
-            .select(*row_cols, F.lit(0).cast("int").alias("_mult"))
-        )
-        batch = ups.unionByName(dels)
-        n = batch.count()
-        if n:
-            self.view.upsert(spark, batch)
-        return n
-
-    def read_view(self, spark) -> DataFrame:
-        """The maintained join view (live rows only)."""
-        return self.view.read(spark).where("_mult > 0").drop("_mult")
-
-    def parity(self, spark) -> bool:
-        """Contract: view == full join recompute at (va, vb)."""
-        want = {
-            tuple(r) for r in self._joined(spark, self.va, self.vb)
-            .select(*sorted(self._joined(spark, self.va, self.vb).columns))
-            .collect()
-        }
-        cols = sorted(
-            c for c in self.view.read(spark).columns if c != "_mult"
-        )
-        got = {
-            tuple(r)
-            for r in self.read_view(spark).select(*cols).collect()
-        }
-        return got == want
-
-
-def scd2_batch(
-    table: ZTable,
-    batch_df: DataFrame,
-    batch_id: int,
-    attr: str = "status",
-    ts: str = "ts_us",
-    seq: str = "seq",
-    n_files: int = 2,
-) -> bool:
-    """Idempotently apply one micro-batch of dimension updates as an
-    SCD Type 2 merge (``sources/layout.scd2_merge``): returns True if
-    committed, False if ``batch_id`` was already in the log.
-
-    Three idempotence layers: the batch-id guard; scd2_merge's own
-    replay tolerance (late rows consistent with recorded history are
-    dropped, so even a guard-less replay is a data no-op); and the
-    coordinate-keyed upsert underneath (identical rows rewrite
-    identically). Batches must be time-ordered per entity — the same
-    ordering contract every CDC apply has."""
-    last = last_committed_batch_id(table)
-    if last is not None and batch_id <= last:
-        return False
-    from ..sources.layout import scd2_merge
-
-    scd2_merge(
-        table, batch_df.sparkSession, batch_df,
-        attr=attr, ts=ts, seq=seq, n_files=n_files,
-        extra_meta={"batch_id": batch_id},
-    )
-    return True
-
-
-def table_scd2_stream(
-    src: DataFrame,
-    table: ZTable,
-    checkpoint_dir: str,
-    attr: str = "status",
-    ts: str = "ts_us",
-    seq: str = "seq",
-    n_files: int = 2,
-):
-    """Wire a streaming dimension-update feed into an SCD2 ZTable:
-    each micro-batch closes/opens versions through
-    :func:`scd2_batch`. Returns the DataStreamWriter; caller picks
-    the trigger and calls .start(). The table after any prefix of
-    batches equals ``operators/windows.scd2_history`` of that prefix
-    (pinned in tests/test_table_stream.py)."""
-    return (
-        src.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, bid: scd2_batch(
-                table, df, bid, attr, ts, seq, n_files
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
 
 
 class CdfMinMaxState:

@@ -1,160 +1,16 @@
-"""Streaming event-time windowed aggregation with watermarks.
+"""Streaming event-time monitors over per-(key, day) event counts.
 
-Extended surface (SURVEY.md §2.9 note): the reference has no event-time
-windows or late-data handling — arrival order is the order. The engine
-inherits both from Structured Streaming; this module pins the idiomatic
-shape: timestamp column → withWatermark → window() groupBy → append-mode
-sink, so late rows beyond the watermark are dropped and windows finalize.
+Each state folds one micro-batch's (key, day, count) aggregate on the
+driver, keyed by batch id so a replayed batch is a no-op, and scores
+the folded counts with the batch operator's exact integer math:
+`SpikeState` mirrors ``operators.windows.event_spikes`` and `EwmaState`
+mirrors ``operators.windows.ewma_daily``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_duration: str = "1 hour",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling-window counts over a *streaming* events DataFrame.
-
-    ``events`` must carry a real timestamp column (the events fixture's
-    timestamp[us] ``ts`` qualifies as-is; normalize other sources with
-    ``as_event_timestamp`` first). Append-mode compatible: the watermark
-    bounds state and finalizes windows ``watermark_delay`` after their
-    end.
-    """
-    return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col(key_col),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_session_counts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked session-window aggregation over a *streaming* events
-    DataFrame — the streaming form of the batch
-    ``windows.session_window_counts`` (same native operator, same
-    boundary semantics: merge at exactly gap, new session beyond it).
-
-    Append-mode compatible: a session finalizes once the watermark
-    passes its close (last event + gap + delay); events arriving later
-    than the watermark are dropped, which is the late-data contract the
-    replay test pins. State is bounded per (user, open session) — the
-    100 TB-safe shape for sessionization over an unbounded stream.
-    """
-    return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(
-            F.session_window(F.col(ts_col), gap),
-            F.col(user_col),
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            F.col(user_col),
-            "n_events",
-        )
-    )
-
-
-def as_event_timestamp(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TIMESTAMP for watermarking:
-    TIMESTAMP_NTZ (the fixture's timestamp[us] read shape) casts via the
-    UTC session timezone; long micros-since-epoch convert numerically."""
-    dtype = dict(df.dtypes).get(ts_col)
-    if dtype in ("bigint", "long", "int"):
-        return df.withColumn(ts_col, F.timestamp_micros(F.col(ts_col)))
-    return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-
-
-def streaming_band_join(
-    left: DataFrame,
-    right: DataFrame,
-    delta_seconds: int = 60,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    watermark_delay: str = "10 minutes",
-    self_pairs: bool = True,
-) -> DataFrame:
-    """Stream-stream temporal band join — the streaming face of
-    ``operators/windows.band_join_pairs``: pairs of same-key events from
-    two streams within ``delta_seconds`` of each other,
-    DataFrame[key, a_id, b_id, gap_us].
-
-    Uses Structured Streaming's native stream-stream inner join with a
-    time-range condition: both sides carry watermarks, so the join state
-    each side buffers is bounded to (Δ + watermark delay) of event time
-    — the engine never holds more than that window of either stream,
-    which is the property that lets the join run forever at ingest
-    scale. The id-ordering filter keeps the output pair set identical to
-    the batch operator's (each unordered pair once, ``a_id < b_id``).
-
-    .. warning:: ``left`` and ``right`` must be the SAME logical stream
-       (self-join semantics, like the batch operator). The ``a_id <
-       b_id`` dedup filter assumes every qualifying pair appears in both
-       orientations; with two genuinely different sources a pair whose
-       left-side id is larger would be silently dropped. For distinct
-       streams, call with ``self_pairs=False`` to keep every (a, b)
-       pair without the ordering filter.
-    """
-    d_us = int(delta_seconds) * 1_000_000
-    a = left.select(
-        F.col(key_col).alias("k"),
-        F.col(id_col).alias("a_id"),
-        F.col(ts_col).cast("timestamp").alias("a_ts"),
-    ).withWatermark("a_ts", watermark_delay)
-    b = right.select(
-        F.col(key_col).alias("kb"),
-        F.col(id_col).alias("b_id"),
-        F.col(ts_col).cast("timestamp").alias("b_ts"),
-    ).withWatermark("b_ts", watermark_delay)
-    pair_cond = (
-        (F.col("a_id") < F.col("b_id"))
-        if self_pairs
-        else (F.col("a_id") != F.col("b_id"))
-    )
-    joined = a.join(
-        b,
-        (F.col("k") == F.col("kb"))
-        & pair_cond
-        & (
-            F.col("b_ts")
-            >= F.col("a_ts") - F.expr(f"INTERVAL {delta_seconds} SECONDS")
-        )
-        & (
-            F.col("b_ts")
-            <= F.col("a_ts") + F.expr(f"INTERVAL {delta_seconds} SECONDS")
-        ),
-    )
-    gap = F.abs(F.unix_micros("a_ts") - F.unix_micros("b_ts"))
-    return joined.where(gap <= d_us).select(
-        F.col("k").alias(key_col),
-        "a_id",
-        "b_id",
-        gap.alias("gap_us"),
-    )
 
 
 class SpikeState:
@@ -235,66 +91,6 @@ class SpikeState:
                         }
                     )
         return out
-
-
-def streaming_left_band_join(
-    left: DataFrame,
-    right: DataFrame,
-    delta_seconds: int = 60,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER temporal join: every left event paired
-    with the same-key right events within ``delta_seconds``; left
-    events with NO match emit exactly once with a NULL right id — but
-    only after the watermark passes their match window, because until
-    then a matching right event could still arrive. That is the outer
-    join's semantic cost: null results trail the event by (Δ + the
-    watermark delay) of EVENT time, and at stream END unmatched rows
-    whose window the final watermark never passed are withheld
-    entirely (they would be wrong to emit — the stream didn't end, it
-    paused). The test pins both behaviors.
-
-    Both sides carry watermarks and the join carries the time-range
-    condition — the two requirements Structured Streaming imposes so
-    each side's buffered state stays bounded to (Δ + delay) of event
-    time. DataFrame[key, a_id, b_id (nullable), gap_us (nullable)].
-    """
-    a = left.select(
-        F.col(key_col).alias("k"),
-        F.col(id_col).alias("a_id"),
-        F.col(ts_col).cast("timestamp").alias("a_ts"),
-    ).withWatermark("a_ts", watermark_delay)
-    b = right.select(
-        F.col(key_col).alias("kb"),
-        F.col(id_col).alias("b_id"),
-        F.col(ts_col).cast("timestamp").alias("b_ts"),
-    ).withWatermark("b_ts", watermark_delay)
-    joined = a.join(
-        b,
-        (F.col("k") == F.col("kb"))
-        & (
-            F.col("b_ts")
-            >= F.col("a_ts") - F.expr(f"INTERVAL {delta_seconds} SECONDS")
-        )
-        & (
-            F.col("b_ts")
-            <= F.col("a_ts") + F.expr(f"INTERVAL {delta_seconds} SECONDS")
-        ),
-        "leftOuter",
-    )
-    gap = F.when(
-        F.col("b_id").isNotNull(),
-        F.abs(F.unix_micros("a_ts") - F.unix_micros("b_ts")),
-    )
-    return joined.select(
-        F.col("k").alias(key_col),
-        "a_id",
-        "b_id",
-        gap.alias("gap_us"),
-    )
 
 
 class EwmaState:

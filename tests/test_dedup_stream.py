@@ -123,18 +123,14 @@ def test_lsh_index_state_real_foreachbatch(spark, sf_dir, tmp_path):
     assert got == want and want
 
 
-def test_dedup_within_watermark_drops_restamped_duplicates(
+def test_dedup_stream_watermark_keys_on_fingerprint_and_ts(
     spark, sf_dir, tmp_path
 ):
-    """dropDuplicatesWithinWatermark dedups on the fingerprint ALONE:
-    a duplicate re-stamped with a different event time still drops —
-    exactly the case the plain watermarked path (which must key on
-    (fingerprint, ts)) lets through. Both run the same real
-    availableNow query; the contrast is asserted, not assumed."""
-    from big_data_computing__spark.streaming.dedup_stream import (
-        dedup_stream_within_watermark,
-    )
-
+    """The watermarked path must keep ``ts`` in its dedup key (Spark
+    needs the watermark column there to evict state), so a duplicate
+    re-stamped with a different event time survives: each distinct
+    fingerprint emits once per distinct event time, asserted on a real
+    availableNow query."""
     docs = read_table(spark, sf_dir, "documents").limit(200)
     base = docs.select(
         "doc_id", "text", F.timestamp_micros(F.lit(1_700_000_000_000_000)).alias("ts")
@@ -151,38 +147,23 @@ def test_dedup_within_watermark_drops_restamped_duplicates(
     data = str(tmp_path / "docs_wm")
     doubled.write.parquet(data)
 
-    def run(make_out, name):
-        stream = spark.readStream.schema(doubled.schema).parquet(data)
-        q = (
-            make_out(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation", str(tmp_path / f"ckpt_{name}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return [
-            r["fingerprint"]
-            for r in spark.sql(
-                f"SELECT fingerprint FROM {name}"
-            ).collect()
-        ]
-
-    wm = run(
-        lambda s: dedup_stream_within_watermark(s), "dedup_wm"
+    stream = spark.readStream.schema(doubled.schema).parquet(data)
+    q = (
+        dedup_stream(stream, ts_col="ts")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("dedup_plain")
+        .option("checkpointLocation", str(tmp_path / "ckpt_dedup_plain"))
+        .trigger(availableNow=True)
+        .start()
     )
+    q.awaitTermination(120)
+    plain = [
+        r["fingerprint"]
+        for r in spark.sql("SELECT fingerprint FROM dedup_plain").collect()
+    ]
     n_distinct = exact_dedup_groups(base).count()
-    # key-only dedup: one survivor per distinct fingerprint, restamps
-    # dropped
-    assert len(wm) == len(set(wm)) == n_distinct
-
-    plain = run(
-        lambda s: dedup_stream(s, ts_col="ts"), "dedup_plain"
-    )
-    # the plain watermarked path keys on (fingerprint, ts): every
-    # restamped duplicate survives — the gap the new operator closes
-    assert len(plain) == len(wm) + restamped.count()
+    # one survivor per (fingerprint, ts): every restamped duplicate
+    # survives beside its first sighting
+    assert len(set(plain)) == n_distinct
+    assert len(plain) == n_distinct + restamped.count()

@@ -534,44 +534,6 @@ def test_ztable_schema_evolution_on_append(spark, sf_dir, tmp_path):
     assert "tag" not in t.read(spark, version=0).columns
 
 
-def test_zorder3_layout_prunes_all_three_axes(spark, sf_dir, tmp_path):
-    """3-D Morton vs 3-col lexicographic: for a small 3-D box the
-    Z-order manifest prunes hard on every axis; for a trailing-column
-    (z-only) band the lexicographic layout is nearly blind while
-    Z-order still skips most files. Pruned read stays exact."""
-    import random
-
-    rnd = random.Random(7)
-    rows = [
-        (rnd.uniform(0, 100), rnd.uniform(0, 100), rnd.uniform(0, 100))
-        for _ in range(40_000)
-    ]
-    df = spark.createDataFrame(rows, "x double, y double, z double")
-    zp, lp = str(tmp_path / "z3"), str(tmp_path / "l3")
-    L.write_zordered3(df, zp, n_files=64, cell=5.0)
-    L.write_lexicographic3(df, lp, n_files=64)
-
-    box = ((40.0, 55.0), (40.0, 55.0), (40.0, 55.0))
-    zres, zn, zt = L.read_pruned3(spark, zp, box)
-    lres, ln, lt = L.read_pruned3(spark, lp, box)
-    assert zt == lt == 64
-    want = df.where(
-        (F.col("x").between(40.0, 55.0))
-        & (F.col("y").between(40.0, 55.0))
-        & (F.col("z").between(40.0, 55.0))
-    ).count()
-    assert want > 0
-    assert zres.count() == want and lres.count() == want
-    assert zn < ln, (zn, ln)
-    assert zn <= 64 // 4
-
-    zband = ((-1e9, 1e9), (-1e9, 1e9), (40.0, 45.0))
-    _, zn2, _ = L.read_pruned3(spark, zp, zband)
-    _, ln2, _ = L.read_pruned3(spark, lp, zband)
-    assert zn2 < ln2, (zn2, ln2)
-    assert ln2 >= 60, "lexicographic should be nearly blind on z"
-
-
 def test_ztable_3d_layout_prunes_z_axis(spark, sf_dir, tmp_path):
     """A ZTable created with z='w' clusters data by the 3-D Morton key
     and records w stats, so a w-band read prunes files; the zcol
@@ -2500,8 +2462,7 @@ def test_scd2_merge_matches_batch_history_and_contracts(
 ):
     """SCD Type 2 on ZTable: applying time-ordered batches through
     scd2_merge must reproduce the one-shot scd2_history of the full
-    stream bit-for-bit; replays are data no-ops; the point-in-time
-    view equals the history filter; late updates raise."""
+    stream bit-for-bit; replays are data no-ops; late updates raise."""
     import pytest as _pytest
 
     from big_data_computing__spark.operators import windows as W
@@ -2557,24 +2518,6 @@ def test_scd2_merge_matches_batch_history_and_contracts(
     # replay of the last batch: data unchanged
     L.scd2_merge(t, spark, upd(batches[2]))
     assert ms(t.read(spark)) == want
-
-    # point-in-time view == history filter at an interior timestamp
-    asof = int(p2)
-    got = ms(L.scd2_as_of(t, spark, asof))
-    hist = W.scd2_history(events)
-    exp = ms(
-        hist.where(
-            (F.col("valid_from_us") <= asof)
-            & (
-                F.col("valid_to_us").isNull()
-                | (F.col("valid_to_us") > asof)
-            )
-        ).select(
-            "user_id", "valid_from_us", "status", "valid_to_us",
-            "is_current",
-        )
-    )
-    assert got == exp
 
     # a whole-batch replay of OLD data is replay-consistent: dropped,
     # data unchanged

@@ -112,54 +112,6 @@ def test_skyline_all_duplicates_kept(spark):
     assert SK.skyline_nd(df, ["x", "y"]).count() == 5
 
 
-def test_skyline_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Real availableNow run: the maintained streaming skyline equals
-    the batch operator over everything that arrived, and a replayed
-    batch id is a strict no-op."""
-    from big_data_computing__spark.streaming.skyline_stream import (
-        SkylineState,
-        skyline_stream_query,
-    )
-
-    part = read_table(spark, sf_dir, "part").select(
-        "p_partkey",
-        "p_retailprice",
-        (-F.col("p_size")).cast("double").alias("neg_size"),
-    )
-    data = str(tmp_path / "parts")
-    part.repartition(6).write.parquet(data)  # several files -> batches
-
-    stream = (
-        spark.readStream.schema(part.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(data)
-    )
-    state = SkylineState(["p_retailprice", "neg_size"])
-    q = skyline_stream_query(stream, state, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = {
-        (d["p_partkey"], d["p_retailprice"], d["neg_size"])
-        for d in state.snapshot()
-    }
-    want = {
-        (r["p_partkey"], r["p_retailprice"], r["neg_size"])
-        for r in SK.skyline_nd(
-            part, ["p_retailprice", "neg_size"]
-        ).collect()
-    }
-    assert got == want and got
-
-    # replayed batch id: strict no-op even with dominating fake rows
-    before = state.snapshot()
-    replay_id = next(iter(state._batches))
-    state.fold(
-        [{"p_partkey": -1, "p_retailprice": -1e9, "neg_size": -1e9}],
-        batch_id=replay_id,
-    )
-    assert state.snapshot() == before
-
-
 def test_skyline_nd_int64_exact_beyond_2p53(spark):
     """Regression (round-7 advice): the SFS kernel used to cast
     dimensions to float64, so (1, 10^17) and (0, 10^17) rounded to the

@@ -1,5 +1,6 @@
-"""Sources and sinks: CSV point parse, parquet round-trip with partition
-pruning, streaming windowed aggregation with watermark."""
+"""Sources and stateful stream starts: CSV point parse, the exact-counts
+stream's state sized to the task slots, and ``start_stateful``'s conf
+swap."""
 
 from __future__ import annotations
 
@@ -10,15 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_computing__spark.sources.readers import (
-    read_points_csv,
-    read_table,
-)
-from big_data_computing__spark.sources.sinks import write_parquet
-from big_data_computing__spark.streaming.windows_stream import (
-    as_event_timestamp,
-    windowed_event_counts,
-)
+from big_data_computing__spark.sources.readers import read_points_csv
 
 
 @pytest.fixture()
@@ -38,88 +31,6 @@ def test_read_points_csv(spark, tmpdir):
     assert (1.5, 2.5) in {(r["x"], r["y"]) for r in rows}
     # malformed line → nulls (PERMISSIVE), not an executor crash
     assert any(r["x"] is None for r in rows)
-
-
-def test_parquet_sink_partition_pruning(spark, sf_dir, tmpdir):
-    events = read_table(spark, sf_dir, "events")
-    out = tmpdir + "/events_out"
-    write_parquet(events, out, partition_by=["event_type"])
-    back = spark.read.parquet(out)
-    assert back.count() == events.count()
-    # partition pruning: filtering the partition column must prune paths
-    pruned = back.where(F.col("event_type") == "click")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or pruned.count() == events.where(
-        F.col("event_type") == "click"
-    ).count()
-    # directory layout is hive-style
-    assert any(
-        name.startswith("event_type=") for name in os.listdir(out)
-    )
-
-
-def test_streaming_windowed_counts_with_watermark(spark, sf_dir, tmpdir):
-    """Replay events through a file stream; windowed counts must equal
-    the batch computation (no late data in replay, so the watermark drops
-    nothing)."""
-    events = as_event_timestamp(
-        read_table(spark, sf_dir, "events").select(
-            "ts", "event_type", "value"
-        )
-    )
-    data_dir = tmpdir + "/stream"
-    events.write.parquet(data_dir)
-
-    stream = spark.readStream.schema(events.schema).parquet(data_dir)
-    agg = windowed_event_counts(stream)
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("win_counts")
-        .option("checkpointLocation", tmpdir + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-
-    got = spark.sql("SELECT * FROM win_counts")
-    # batch twin: same expression on the static frame
-    batch = (
-        events.groupBy(
-            F.window(F.col("ts"), "1 hour"), F.col("event_type")
-        )
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    g = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in got.collect()
-    }
-    b = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in batch.collect()
-    }
-    # append mode with availableNow emits all finalized windows; the final
-    # (unfinalized) window may be withheld — require containment + bulk
-    assert set(g) <= set(b)
-    assert len(g) >= len(b) - 10
-    for key, val in g.items():
-        assert val[0] == b[key][0]
-
-
-def test_show_report_prints(spark, sf_dir, capsys):
-    from big_data_computing__spark.sources.sinks import show_report
-
-    df = read_table(spark, sf_dir, "region")
-    show_report(df, "regions", n=5)
-    out = capsys.readouterr().out
-    assert "== regions ==" in out
-    assert "r_regionkey" in out
 
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -316,117 +227,3 @@ def test_start_stateful_threads_cannot_restore_each_others_value(spark):
     assert not any(t.is_alive() for t in threads)
     assert seen == [slots] * 8
     assert spark.conf.get(SHUFFLE_PARTITIONS) == before
-
-
-def test_orc_and_jsonl_roundtrip(spark, sf_dir, tmpdir):
-    """ORC and JSON-lines sinks round-trip the documents table: schema
-    and rows survive, and the ORC read pushes filters down."""
-    from big_data_computing__spark.sources.sinks import (
-        write_json_lines,
-        write_orc,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    orc_path = tmpdir + "/docs_orc"
-    write_orc(docs, orc_path, partition_by=["lang"])
-    back = spark.read.orc(orc_path)
-    assert back.count() == docs.count()
-    assert set(back.columns) == set(docs.columns)
-    pruned = back.where(F.col("lang") == "en")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or pruned.count() == docs.where(
-        F.col("lang") == "en"
-    ).count()
-
-    jl_path = tmpdir + "/docs_jsonl"
-    write_json_lines(docs.select("doc_id", "text", "lang"), jl_path)
-    jback = spark.read.json(jl_path)
-    assert jback.count() == docs.count()
-    got = {r["doc_id"] for r in jback.select("doc_id").collect()}
-    want = {r["doc_id"] for r in docs.select("doc_id").collect()}
-    assert got == want
-
-
-def test_watermark_drops_beyond_late_after_grace_batch(spark, tmpdir):
-    """The late-data contract, pinned with a controlled THREE-batch
-    replay (maxFilesPerTrigger=1 + availableNow = one file per
-    micro-batch, modification-time order). Spark splits the two
-    watermark roles (SPARK-40925): late-event FILTERING uses the
-    previous batch's watermark while state EVICTION uses the updated
-    one — so a straggler landing in the very next batch after the
-    advance still sneaks into its window (one batch of grace,
-    measured), and only a straggler one batch later is dropped. The
-    test pins the drop: the 10:00 window finalizes at 2 events and the
-    batch-3 straggler into it neither grows nor resurrects it."""
-    import os
-    import time as _time
-
-    from pyspark.sql import Row
-
-    data_dir = str(tmpdir) + "/stream3"
-    os.makedirs(data_dir)
-
-    def write_file(name, rows, mtime):
-        df = spark.createDataFrame(
-            [
-                Row(ts=r[0], event_type=r[1], value=float(r[2]))
-                for r in rows
-            ]
-        ).select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
-        df.coalesce(1).write.parquet(data_dir + "/" + name)
-        for fn in os.listdir(data_dir + "/" + name):
-            os.utime(os.path.join(data_dir, name, fn), (mtime, mtime))
-
-    now = _time.time()
-    # batch 1: the 10:00 window's two real events + a 12:00 event that
-    # will advance the watermark to 11:50 (delay 10m)
-    write_file(
-        "f1",
-        [
-            ("2024-01-01 10:00:00", "click", 1),
-            ("2024-01-01 10:05:00", "click", 1),
-            ("2024-01-01 12:00:00", "view", 1),
-        ],
-        now - 100,
-    )
-    # batch 2: grace batch — watermark 11:50 becomes the FILTERING
-    # watermark from the next batch on; the 10:00 window is evicted
-    # (finalized at n=2) at this batch's end
-    write_file("f2", [("2024-01-01 12:10:00", "view", 1)], now - 50)
-    # batch 3: the beyond-watermark straggler — must be DROPPED
-    write_file(
-        "f3",
-        [
-            ("2024-01-01 10:07:00", "click", 1),
-            ("2024-01-01 12:05:00", "view", 1),
-        ],
-        now - 10,
-    )
-
-    schema = "ts timestamp, event_type string, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir + "/*")
-    )
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("late_counts")
-        .option("checkpointLocation", str(tmpdir) + "/ckpt3")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM late_counts").collect()
-    }
-    # finalized with ONLY the two on-time events; the batch-3
-    # straggler was dropped, not merged and not emitted as its own row
-    assert got == {("2024-01-01 10:00:00", "click"): 2}

@@ -38,140 +38,3 @@ def test_stateful_running_counts(spark, sf_dir, tmp_path):
     }
     truth = {r["item"]: r["cnt"] for r in item_counts(batch).collect()}
     assert got == truth
-
-
-def test_streaming_transitions_replay_parity(spark, sf_dir, tmp_path):
-    """The O(1)-state streaming transition twin: replaying the events
-    fixture through time-ordered micro-batches and aggregating the
-    emitted pairs equals the batch transition matrix bit-for-bit —
-    including the pairs that straddle batch boundaries."""
-    from big_data_computing__spark.operators.windows import (
-        event_time_us,
-        event_transitions,
-    )
-    from big_data_computing__spark.sources.readers import read_table
-    from big_data_computing__spark.streaming.stateful import (
-        streaming_transitions,
-    )
-
-    events = read_table(spark, sf_dir, "events")
-    typed = events.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        event_time_us(events).alias("u"),
-    ).cache()
-    data_dir = str(tmp_path / "tdata")
-    # three time-ordered chunks, one file each (the in-order arrival
-    # contract every replay twin documents)
-    rows = typed.orderBy("u", "event_id").collect()
-    third = len(rows) // 3
-    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for part in chunks:
-        spark.createDataFrame(
-            part, "user_id long, event_id long, event_type string, u long"
-        ).coalesce(1).write.mode("append").parquet(data_dir)
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, event_type string, u long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    q = (
-        streaming_transitions(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("trans_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt_t"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in spark.sql(
-            "SELECT prev_type, next_type, COUNT(*) AS n "
-            "FROM trans_stream GROUP BY 1, 2"
-        ).collect()
-    }
-    want = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in event_transitions(events).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_funnel_replay_parity(spark, sf_dir, tmp_path):
-    """The O(k)-state streaming funnel: replaying the events fixture
-    through time-ordered micro-batches and counting users at each
-    completed step equals the batch funnel_report exactly — including
-    progress that straddles batch boundaries."""
-    from big_data_computing__spark.operators.windows import (
-        event_time_us,
-        funnel_report,
-    )
-    from big_data_computing__spark.sources.readers import read_table
-    from big_data_computing__spark.streaming.stateful import (
-        streaming_funnel,
-    )
-
-    events = read_table(spark, sf_dir, "events")
-    typed = events.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        event_time_us(events).alias("u"),
-    ).cache()
-    data_dir = str(tmp_path / "fdata")
-    rows = typed.orderBy("u", "event_id").collect()
-    third = len(rows) // 3
-    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for part in chunks:
-        spark.createDataFrame(
-            part, "user_id long, event_id long, event_type string, u long"
-        ).coalesce(1).write.mode("append").parquet(data_dir)
-
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, event_type string, u long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data_dir)
-    )
-    q = (
-        streaming_funnel(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("funnel_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt_f"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # last emitted state per user (update mode re-emits per batch)
-    import pandas as pd  # noqa: F401
-
-    emitted = spark.sql(
-        "SELECT user_id, completed FROM funnel_stream"
-    ).collect()
-    # memory sink appends update rows in batch order; the FINAL row per
-    # user is the end state — reduce via max since completed only grows
-    final: dict[int, int] = {}
-    for r in emitted:
-        final[r["user_id"]] = max(
-            final.get(r["user_id"], 0), r["completed"]
-        )
-    want = {
-        r["step"]: r["users"]
-        for r in funnel_report(events).collect()
-    }
-    got = {
-        step: sum(1 for c in final.values() if c >= step)
-        for step in want
-    }
-    assert got == want
-    assert want[1] > 0  # non-trivial fixture

@@ -69,50 +69,6 @@ def test_replayed_batch_is_skipped(spark, sf_dir, tmp_path):
     assert t.read(spark).count() == n_after_first + 10
 
 
-def test_stream_upserts_replace_and_are_idempotent(
-    spark, sf_dir, tmp_path
-):
-    """Streaming CDC apply: arriving rows REPLACE same-coordinate rows
-    (no duplicates), inserts land, and a replayed batch id is a strict
-    no-op — the table is the changefeed's latest state."""
-    from big_data_computing__spark.streaming.table_stream import (
-        table_upsert_stream,
-        upsert_batch,
-    )
-
-    t, base, incoming = _make_table(spark, sf_dir, tmp_path)
-    n_base = base.count()
-    # the changefeed: updated copies of existing rows (same x,y, new
-    # id marker) + genuinely new rows
-    updates = base.orderBy("id").limit(40).withColumn(
-        "id", F.col("id") + 1000000
-    )
-    inserts = incoming.orderBy("id").limit(60)
-    feed = updates.unionByName(inserts).localCheckpoint()
-    src_dir = str(tmp_path / "changes")
-    feed.repartition(2).write.parquet(src_dir)
-
-    src = spark.readStream.schema(feed.schema).parquet(src_dir)
-    q = (
-        table_upsert_stream(src, t, str(tmp_path / "ckpt_up"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = t.read(spark)
-    # replacements did not grow the table; inserts did
-    assert out.count() == n_base + inserts.count()
-    assert out.where(F.col("id") >= 1000000).count() == 40
-    ops = {h["operation"] for h in t.history()} - {"create"}
-    assert ops == {"merge"}
-
-    # replaying an already-recorded batch id is refused
-    last_v = t.latest_version()
-    assert upsert_batch(t, feed, batch_id=0) is False
-    assert t.latest_version() == last_v
-
-
 def test_cdf_agg_state_tracks_full_lifecycle(spark, sf_dir, tmp_path):
     """CdfAggState folded over create → append → DV delete → upsert →
     compact equals the full GROUP BY recompute after EVERY advance —
@@ -258,78 +214,6 @@ def test_cdf_join_agg_state_tracks_both_tables(spark, sf_dir, tmp_path):
     assert st.state == before
 
 
-def test_scd2_stream_matches_batch_history(spark, sf_dir, tmp_path):
-    """Streaming SCD2 apply: a real foreachBatch run lands the full
-    update stream; manual ordered micro-batches hit the same final
-    history; replays are no-ops via all three idempotence layers."""
-    from collections import Counter
-
-    from big_data_computing__spark.operators import windows as W
-    from big_data_computing__spark.sources.readers import read_table
-    from big_data_computing__spark.streaming.table_stream import (
-        scd2_batch,
-        table_scd2_stream,
-    )
-
-    SCD = ("user_id", "valid_from_us", "status", "valid_to_us",
-           "is_current")
-
-    def ms(df):
-        return Counter(tuple(r[c] for c in SCD) for r in df.collect())
-
-    events = read_table(spark, sf_dir, "events")
-    upd = events.select(
-        "user_id",
-        F.col("event_type").alias("status"),
-        W.event_time_us(events).alias("ts_us"),
-        F.col("event_id").alias("seq"),
-    )
-    want = ms(W.scd2_history(events))
-
-    # seed the table with the first entity-version of a tiny prefix so
-    # create() has rows, then stream the WHOLE feed (late duplicates of
-    # the prefix are replay-consistent and dropped)
-    first = upd.orderBy("ts_us", "seq").limit(1)
-    h0 = W.scd2_history(
-        first.select(
-            F.col("user_id"),
-            F.col("status").alias("event_type"),
-            F.col("ts_us").alias("ts"),
-            F.col("seq").alias("event_id"),
-        )
-    )
-    t = L.ZTable.create(
-        h0.select(
-            "user_id", "valid_from_us", "status", "valid_to_us",
-            "is_current",
-        ),
-        str(tmp_path / "scd2s"),
-        x="user_id",
-        y="valid_from_us",
-        n_files=2,
-        cell=86400e6,
-    )
-
-    src_dir = str(tmp_path / "updates")
-    upd.coalesce(1).write.parquet(src_dir)  # one file -> one batch
-    src = spark.readStream.schema(upd.schema).parquet(src_dir)
-    q = (
-        table_scd2_stream(src, t, str(tmp_path / "ckpt_scd2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert ms(t.read(spark)) == want
-
-    # replayed batch id: skipped by the guard
-    assert scd2_batch(t, upd, batch_id=0) is False
-    # even bypassing the guard, a replay is a data no-op
-    from big_data_computing__spark.sources.layout import scd2_merge
-
-    scd2_merge(t, spark, upd)
-    assert ms(t.read(spark)) == want
-
-
 def test_cdf_minmax_state_affected_group_recompute(
     spark, sf_dir, tmp_path
 ):
@@ -401,95 +285,3 @@ def test_cdf_minmax_state_affected_group_recompute(
     # replay safety
     v = st.version
     assert st.advance(spark) == 0 and st.version == v
-
-
-def test_join_view_table_row_level_ivm(spark, sf_dir, tmp_path):
-    """JoinViewTable maintains the joined ROWS as their own ZTable
-    under commits on either side — append A, DV-delete B, payload
-    update A, id-replacing upsert A, append B — and equals the full
-    join recompute after every advance. Deletes are merge-on-read
-    tombstones (_mult = 0) behind read_view."""
-    from big_data_computing__spark.sources.layout import ZTable
-    from big_data_computing__spark.sources.readers import customer_points
-    from big_data_computing__spark.streaming.table_stream import (
-        JoinViewTable,
-    )
-
-    pts = customer_points(spark, sf_dir)
-    fact = pts.select(
-        "id",
-        "x",
-        "y",
-        F.pmod(F.col("id"), F.lit(37)).alias("k"),
-        (F.col("id") % 1000).alias("val"),
-    )
-    dim = pts.where(F.col("id") < 3700).select(
-        (F.col("id") + 10_000_000).alias("b_id"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.pmod(F.col("id"), F.lit(37)).alias("k"),
-        F.pmod(F.col("id"), F.lit(5)).alias("grp"),
-    )
-    a = ZTable.create(
-        fact.where(F.col("id") % 2 == 0),
-        str(tmp_path / "jv_fact"),
-        n_files=6,
-        cell=200.0,
-    )
-    b = ZTable.create(
-        dim.where(F.col("b_id") % 3 != 0),
-        str(tmp_path / "jv_dim"),
-        x="bx",
-        y="by",
-        n_files=4,
-        cell=200.0,
-    )
-    jv = JoinViewTable(
-        a, b, key="k", a_id="id", b_id="b_id",
-        view_path=str(tmp_path / "jv_view"),
-    )
-    jv.advance(spark)
-    assert jv.read_view(spark).count() > 0
-    assert jv.parity(spark)
-
-    # append on the fact side only
-    a.append(fact.where(F.col("id") % 2 == 1), n_files=4)
-    assert jv.advance(spark) > 0
-    assert jv.parity(spark)
-
-    # merge-on-read delete on the dim side: pairs leave the join as
-    # _mult=0 tombstones, invisible through read_view
-    b.delete_where_dv(spark, (0.0, 5000.0), (0.0, 5000.0))
-    jv.advance(spark)
-    assert jv.parity(spark)
-    assert jv.view.read(spark).where("_mult = 0").count() > 0
-
-    # payload UPDATE: same fact ids, changed val — per-pair net 0,
-    # the coordinate is rewritten in place with the new payload
-    upd = fact.limit(10).withColumn("val", F.col("val") + 5000)
-    a.upsert(spark, upd.localCheckpoint())
-    jv.advance(spark)
-    assert jv.parity(spark)
-
-    # id-REPLACING upsert (same (x,y) coordinate, new id): the view
-    # drops the old id's pairs and gains the new id's, in one advance;
-    # then a dim append lands in the same advance window
-    batch = (
-        fact.limit(25)
-        .select(
-            (F.col("id") + 900_000).alias("id"),
-            "x",
-            "y",
-            F.pmod(F.col("id") + 900_000, F.lit(37)).alias("k"),
-            ((F.col("id") + 900_000) % 1000).alias("val"),
-        )
-        .localCheckpoint()
-    )
-    a.upsert(spark, batch)
-    b.append(dim.where(F.col("b_id") % 3 == 0), n_files=2)
-    jv.advance(spark)
-    assert jv.parity(spark)
-
-    # replay safety: nothing moved, advance is a no-op
-    assert jv.advance(spark) == 0
-    assert jv.parity(spark)

@@ -87,82 +87,6 @@ def test_session_window_boundary_semantics(spark):
     ]
 
 
-def test_streaming_session_windows_watermark(spark, sf_dir, tmp_path):
-    """Streaming session windows finalize to exactly the batch operator's
-    sessions, and an event arriving later than the watermark is DROPPED
-    (the late-data contract)."""
-    import shutil
-    import tempfile
-
-    from big_data_computing__spark.operators.windows import (
-        session_window_counts,
-    )
-    from datetime import timedelta
-
-    from big_data_computing__spark.streaming.windows_stream import (
-        as_event_timestamp,
-        streaming_session_counts,
-    )
-
-    events = read_table(spark, sf_dir, "events").select("user_id", "ts")
-    # ts collects as datetime (the fixture's timestamp[us] read as NTZ)
-    rows = sorted(
-        ((r["user_id"], r["ts"]) for r in events.collect()),
-        key=lambda t: t[1],
-    )
-    half = len(rows) // 2
-    max_ts = rows[-1][1]
-    sentinel_user = 99_999_999
-    late_user, late_ts = rows[0][0], rows[0][1]
-    data = tempfile.mkdtemp(prefix="bdc_sess_")
-    chunks = [
-        rows[:half],
-        rows[half:],
-        # sentinel advances the watermark far past every real session;
-        # the duplicate of the earliest event is now LATE and must drop
-        [(sentinel_user, max_ts + timedelta(days=10)),
-         (late_user, late_ts)],
-    ]
-    for part in chunks:
-        # one file per chunk: maxFilesPerTrigger=1 must see whole chunks,
-        # else the watermark advances mid-chunk and drops legit events
-        spark.createDataFrame(
-            part, "user_id long, ts timestamp_ntz"
-        ).coalesce(1).write.mode("append").parquet(data)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp_ntz")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(data)
-    )
-    out = streaming_session_counts(as_event_timestamp(stream))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["user_id"], r["s_us"], r["n_events"])
-        for r in spark.sql(
-            "SELECT user_id, unix_micros(session_start) AS s_us, "
-            "n_events FROM sess_test"
-        ).collect()
-        if r["user_id"] != sentinel_user
-    }
-    want = {
-        (r["user_id"], r["session_start_us"], r["n_events"])
-        for r in session_window_counts(events).collect()
-    }
-    # the late duplicate was dropped: streaming == plain batch exactly
-    assert got == want
-    shutil.rmtree(data, ignore_errors=True)
-
-
 def test_band_join_boundary_and_blocking(spark, sf_dir):
     """Band join: a pair exactly Δ apart is KEPT, Δ+1us is dropped,
     pairs straddling a bucket boundary are found, and each pair exactly
@@ -210,43 +134,6 @@ def test_band_join_boundary_and_blocking(spark, sf_dir):
     )
     want = {r["event_type"]: (r["n"], r["s"]) for r in naive.collect()}
     assert rep == want and len(rep) > 0
-
-
-def test_streaming_band_join_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-stream band join (watermarked time-range join) over a
-    replay of the events fixture must produce exactly the batch band
-    join's pairs — inner stream-stream joins emit eagerly, so replay
-    parity is exact."""
-    from big_data_computing__spark.streaming.windows_stream import (
-        streaming_band_join,
-    )
-
-    events = read_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "ts"
-    )
-    data = str(tmp_path / "band_events")
-    events.coalesce(1).write.parquet(data)
-    stream = spark.readStream.schema(events.schema).parquet(data)
-    out = streaming_band_join(stream, stream, delta_seconds=600)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("band_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt_band"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["event_type"], r["a_id"], r["b_id"], r["gap_us"])
-        for r in spark.sql("SELECT * FROM band_stream").collect()
-    }
-    want = {
-        (r["event_type"], r["a_id"], r["b_id"], r["gap_us"])
-        for r in W.band_join_pairs(events, 600).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def _ev(rows, spark):
@@ -554,111 +441,6 @@ def test_mad_outliers_integer_median_and_gate(spark):
         ("a", d0 + 4): (12, 2, 10000),
         ("e", d0 + 3): (10, 2, 7500),
     }
-
-
-def test_streaming_left_outer_band_join_null_emission(spark, tmp_path):
-    """LEFT OUTER stream-stream join semantics, pinned with a
-    controlled per-file batch replay: matched pairs emit normally;
-    an unmatched left event emits its NULL row only AFTER a later
-    batch's watermark passes its match window; and an unmatched left
-    event whose window the final watermark never passed is WITHHELD at
-    stream end (the honest outer-join caveat)."""
-    import os
-    import time as _time
-
-    from pyspark.sql import Row
-
-    from big_data_computing__spark.streaming.windows_stream import (
-        streaming_left_band_join,
-    )
-
-    ldir = str(tmp_path / "left")
-    rdir = str(tmp_path / "right")
-    os.makedirs(ldir)
-    os.makedirs(rdir)
-
-    def write(dirpath, name, rows, mtime):
-        df = spark.createDataFrame(
-            [
-                Row(
-                    ts=r[0],
-                    event_type=r[1],
-                    event_id=int(r[2]),
-                )
-                for r in rows
-            ]
-        ).select(
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "event_id",
-        )
-        df.coalesce(1).write.parquet(dirpath + "/" + name)
-        for fn in os.listdir(dirpath + "/" + name):
-            os.utime(os.path.join(dirpath, name, fn), (mtime, mtime))
-
-    now = _time.time()
-    # left batch 1: click 1 (will match), click 2 (never matches),
-    # click 3 late in the stream (never matches, window never closed)
-    write(
-        ldir,
-        "l1",
-        [
-            ("2024-01-01 10:00:00", "click", 1),
-            ("2024-01-01 10:05:00", "click", 2),
-        ],
-        now - 100,
-    )
-    # right batch 1: a match for click 1 only
-    write(rdir, "r1", [("2024-01-01 10:00:20", "click", 101)], now - 100)
-    # batch 2: advance BOTH watermarks far past click 2's match window
-    # (delta 60s + delay 10m) so its null row must flush; click 3
-    # (12:00) arrives now — its window (closes 12:01) will be passed
-    # by batch 3's watermark (12:20), so its null row flushes too
-    write(ldir, "l2", [("2024-01-01 12:00:00", "click", 3)], now - 50)
-    write(rdir, "r2", [("2024-01-01 12:00:00", "view", 900)], now - 50)
-    # batch 3: one more advance so batch 2's watermark (which trails
-    # one batch, cf. the grace-batch test) actually moves past 10:06;
-    # click 4 (12:30) lands at the stream's very end — its window is
-    # never watermark-passed
-    write(ldir, "l3", [("2024-01-01 12:30:00", "click", 4)], now - 10)
-    write(rdir, "r3", [("2024-01-01 12:30:00", "view", 901)], now - 10)
-
-    schema = "ts timestamp, event_type string, event_id long"
-    ls = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ldir + "/*")
-    )
-    rs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(rdir + "/*")
-    )
-    out = streaming_left_band_join(ls, rs, delta_seconds=60)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("lo_band")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM lo_band").collect()
-    by_a = {}
-    for r in rows:
-        by_a.setdefault(r["a_id"], []).append(r["b_id"])
-    # click 1 matched its view, exactly once
-    assert by_a.get(1) == [101]
-    # clicks 2 and 3: null rows flushed exactly once, each only after
-    # a LATER batch's watermark passed its match window — the outer
-    # join's event-time trailing emission
-    assert by_a.get(2) == [None]
-    assert by_a.get(3) == [None]
-    # click 4: unmatched, window never closed by the final watermark
-    # -> withheld at stream end (NOT emitted as null) — the honest
-    # availableNow caveat: the stream paused, it didn't end
-    assert 4 not in by_a
 
 
 # ---------------------------------------------------------------------------
