@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_computing__spark.functions.sqlsafe import sql_double
 from big_data_computing__spark.operators import clustering as _cl
 from big_data_computing__spark.operators import curation as _cu
 from big_data_computing__spark.operators import dedup as _dd
@@ -228,22 +229,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def c5_radius_fixed_centers(spark, sf_dir):
         # MRFFT Round 3 (radius) with a deterministic center set — the
         # SQL-checkable twin of the full pipeline's R3.
-        pts = _rd.embedding_points(spark, sf_dir)
-        centers = pts.where(F.col("id").isin(*CENTER_IDS)).select(
-            F.col("features").alias("cf")
+        from big_data_computing__spark.functions.geometry import (
+            sq_dist_vec_spark_sql,
         )
-        from big_data_computing__spark.functions.geometry import dist_vec
 
-        per_point = (
-            pts.crossJoin(F.broadcast(centers))
-            .select(
-                "id", dist_vec(F.col("features"), F.col("cf")).alias("d")
-            )
-            .groupBy("id")
-            .agg(F.min("d").alias("min_dist"))
-        )
-        return per_point.agg(
-            F.round(F.max("min_dist"), 6).alias("radius")
+        ids = ", ".join(str(i) for i in CENTER_IDS)
+        dist = f"sqrt({sq_dist_vec_spark_sql('p.features', 'c.cf')})"
+        return spark.sql(
+            f"""
+SELECT round(max(min_dist), 6) AS radius
+FROM (
+  SELECT id, min(d) AS min_dist
+  FROM (
+    SELECT /*+ BROADCAST(c) */ p.id, {dist} AS d
+    FROM {{pts}} p
+    CROSS JOIN (SELECT features AS cf FROM {{pts}} WHERE id IN ({ids})) c
+  ) dists
+  GROUP BY id
+) per_point""",
+            pts=_rd.embedding_points(spark, sf_dir),
         )
 
     def c2_fft_coreset(spark, sf_dir):
@@ -263,9 +267,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         res = _cl.mr_fft(
             _rd.embedding_points(spark, sf_dir), FFT_K, FFT_L, SEED
         )
-        return spark.createDataFrame(
-            [(round(res.radius, 6), res.coreset_size)],
-            "radius double, coreset_size int",
+        # a literal row: no Python-worker stage, unlike createDataFrame
+        return spark.sql(
+            f"SELECT {sql_double(round(res.radius, 6))} AS radius, "
+            f"{int(res.coreset_size)} AS coreset_size"
         )
 
     # -- core reference surface: frequent items (HW3, batch form) --
@@ -1093,10 +1098,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             m=OUTLIER_M,
             seed=SEED,
         )
-        return res.summary.select(
-            F.lit(round(res.radius, 6)).alias("radius"),
-            "sure_outliers",
-            "uncertain_points",
+        return spark.sql(
+            f"SELECT {sql_double(round(res.radius, 6))} AS radius, "
+            "sure_outliers, uncertain_points FROM {summary}",
+            summary=res.summary,
         )
 
     # -- extended surface: window functions / event-time windows --

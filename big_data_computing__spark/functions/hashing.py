@@ -59,6 +59,12 @@ def hash60(col: Column, mode: str = "md5") -> Column:
     raise ValueError(f"unknown hash mode: {mode!r}")
 
 
+def hash60_spark_sql(expr: str) -> str:
+    """Spark SQL text of :func:`hash60` (md5 mode) over the string
+    expression ``expr``, for plans built as one SQL text."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def hash60_sql(expr: str) -> str:
     """DuckDB SQL text equivalent of :func:`hash60` (for oracle queries)."""
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"

@@ -17,8 +17,8 @@ arrival-position t gets independent uniform draws
 - the per-item decisions are identical in distribution to the reference's
   (uniform slot choice, accept-with-prob m/t, admit-with-prob r/n);
 - the whole sampler becomes a **pure function of the ordered stream** —
-  expressible as one declarative DataFrame plan (filter + group-by +
-  max_by), embarrassingly parallel, no sequential pass;
+  expressible as one declarative plan (filter + group-by + max_by),
+  embarrassingly parallel, no sequential pass;
 - the same arithmetic runs in ANSI SQL, so DuckDB reproduces the sampler
   bit-for-bit — the samplers are fully correctness-oracle-checked, which
   the reference (unseeded, stateful) could never be.
@@ -27,6 +27,17 @@ Inputs are "stream tables": DataFrame[seq long (1-based arrival order),
 item long]. Batch operators here treat the table as the full stream
 prefix of length n; streaming/ wires the same logic to Structured
 Streaming micro-batches.
+
+Plan building: the exact, reservoir and sticky operators render their
+whole plan as one Spark SQL text in Python and run it with one
+``spark.sql(text, stream=df)`` call, which registers the stream as a
+temp view for the analysis and drops it afterwards; they keep their
+DataFrame-in / DataFrame-out signatures. The ``_*_spark_sql`` functions
+compose as nested subqueries, and each keeps the IEEE operation order of
+its DuckDB twin (``cnt >= φ * total``, ``m / seq``). The stream length
+is a broadcast one-row subplan (``_STREAM_TOTAL``), never an eager
+``count()``. The sketches further down still build their plans with Column
+expressions.
 
 Scale notes: exact counts are one partial+final hash aggregation; the
 reservoir reconstruction groups by slot (m groups; m = ⌈1/φ⌉ is small);
@@ -43,16 +54,26 @@ from pyspark.sql import functions as F
 from ..functions.hashing import (
     TWO_POW_60,
     hash60,
+    hash60_spark_sql,
     hash60_sql,
     uniform01_sql,
 )
-from ..functions.sqlsafe import sql_str
+from ..functions.sqlsafe import sql_double, sql_str
 
 
 def _u(tag: str, seed: int, t: Column) -> Column:
     """Counter-based uniform(0,1) draw for arrival position t."""
     key = F.concat_ws("-", F.lit(tag), F.lit(str(seed)), t.cast("string"))
     return hash60(key) / F.lit(TWO_POW_60)
+
+
+def _u_spark_sql(tag: str, seed: int, t_expr: str) -> str:
+    """Spark SQL text of :func:`_u`."""
+    key = (
+        f"concat_ws('-', {sql_str(tag)}, {sql_str(str(seed))}, "
+        f"CAST({t_expr} AS STRING))"
+    )
+    return f"({hash60_spark_sql(key)} / {sql_double(TWO_POW_60)})"
 
 
 def _u_sql(tag: str, seed: int, t_expr: str) -> str:
@@ -74,34 +95,47 @@ def sticky_rate(phi: float, epsilon: float, delta: float) -> float:
 # ---------------------------------------------------------------------------
 
 
-def item_counts(stream: DataFrame, item_col: str = "item") -> DataFrame:
-    """Exact per-item counts: DataFrame[item, cnt]."""
-    return stream.groupBy(F.col(item_col).alias("item")).agg(
-        F.count("*").alias("cnt")
+def _item_counts_spark_sql(item_col: str) -> str:
+    return (
+        f"SELECT {item_col} AS item, count(*) AS cnt FROM {{stream}} "
+        f"GROUP BY {item_col}"
     )
 
 
-def _stream_total(stream: DataFrame) -> DataFrame:
-    """The stream length as a one-row ``_total`` table for a broadcast
-    cross join. Every operator builds the identical subplan, so Spark
-    reuses one exchange for all of them within a query."""
-    return F.broadcast(stream.agg(F.count("*").alias("_total")))
+def item_counts(stream: DataFrame, item_col: str = "item") -> DataFrame:
+    """Exact per-item counts: DataFrame[item, cnt]."""
+    return stream.sparkSession.sql(
+        _item_counts_spark_sql(item_col), stream=stream
+    )
+
+
+# The stream length as a one-row relation for a broadcast cross join
+# (alias ``_tot``). Every operator renders the identical subplan, so Spark
+# reuses one exchange for all of them within a query.
+_STREAM_TOTAL = "(SELECT count(*) AS _total FROM {stream}) _tot"
+
+
+def _true_frequent_spark_sql(phi: float, item_col: str) -> str:
+    return f"""
+SELECT /*+ BROADCAST(_tot) */ item, cnt
+FROM ({_item_counts_spark_sql(item_col)}) counts CROSS JOIN {_STREAM_TOTAL}
+WHERE cnt >= {sql_double(phi)} * _total"""
 
 
 def true_frequent_items(
     stream: DataFrame, phi: float, item_col: str = "item"
 ) -> DataFrame:
-    """Items with count >= φ·total: DataFrame[item, cnt].
-
-    Fully declarative — the total is a broadcast scalar subplan, not a
-    driver-side count, so the whole thing is one job
+    """Items with count >= φ·total: DataFrame[item, cnt]
     (reference: big_data_computing_3.py:10-12).
+
+    The total is a broadcast one-row subplan, not an eager ``count()``,
+    so building the plan runs no job. Collecting it runs four jobs (at
+    sf0.001, sf0.01 and sf0.1 alike): the count's shuffle stage, the
+    broadcast of the total, the item-count shuffle stage, and the result
+    stage.
     """
-    counts = item_counts(stream, item_col)
-    return (
-        counts.crossJoin(_stream_total(stream))
-        .where(F.col("cnt") >= F.lit(phi) * F.col("_total"))
-        .select("item", "cnt")
+    return stream.sparkSession.sql(
+        _true_frequent_spark_sql(phi, item_col), stream=stream
     )
 
 
@@ -118,26 +152,29 @@ def true_frequent_sql(stream_sql: str, phi: float) -> str:
 # ---------------------------------------------------------------------------
 
 
-def reservoir_writes(
-    stream: DataFrame, m: int, seed: int = 0
-) -> DataFrame:
-    """Accepted reservoir writes: DataFrame[slot, seq, item].
+def _reservoir_writes_spark_sql(m: int, seed: int) -> str:
+    """Accepted reservoir writes: (slot, seq, item).
 
     Reference per-item rule (big_data_computing_3.py:15-22): first m items
     fill the reservoir; afterwards item t picks uniform slot i and replaces
     it with probability m/t. Here slot and acceptance are counter-based
     draws on t, making the write set a pure row-wise filter.
     """
-    seq = F.col("seq")
-    slot = F.when(seq <= m, seq - 1).otherwise(
-        F.floor(_u("res-slot", seed, seq) * m).cast("long")
-    )
-    accepted = (seq <= m) | (
-        _u("res-acc", seed, seq) <= F.lit(float(m)) / seq
-    )
+    m = int(m)
+    u_slot = _u_spark_sql("res-slot", seed, "seq")
+    u_acc = _u_spark_sql("res-acc", seed, "seq")
+    return f"""
+SELECT CASE WHEN seq <= {m} THEN seq - 1
+            ELSE CAST(FLOOR({u_slot} * {m}) AS BIGINT) END AS slot,
+       seq, item
+FROM {{stream}}
+WHERE seq <= {m} OR {u_acc} <= {sql_double(m)} / seq"""
+
+
+def _reservoir_sample_spark_sql(m: int, seed: int) -> str:
     return (
-        stream.where(accepted)
-        .select(slot.alias("slot"), "seq", "item")
+        "SELECT slot, max_by(item, seq) AS item "
+        f"FROM ({_reservoir_writes_spark_sql(m, seed)}) writes GROUP BY slot"
     )
 
 
@@ -148,11 +185,22 @@ def reservoir_sample(stream: DataFrame, m: int, seed: int = 0) -> DataFrame:
     the reference's sequential loop ends with, reconstructed in one
     group-by over m groups.
     """
-    return (
-        reservoir_writes(stream, m, seed)
-        .groupBy("slot")
-        .agg(F.max_by("item", "seq").alias("item"))
+    return stream.sparkSession.sql(
+        _reservoir_sample_spark_sql(m, seed), stream=stream
     )
+
+
+def _flagged_spark_sql(est: str, cols: str, phi: float) -> str:
+    """Columns ``cols`` of relation ``est`` (item, ...) and a ``flag``:
+    ``+`` when the item is truly frequent, ``-`` otherwise. The
+    membership test is a left join on the truth set, the reference's
+    Python ``in`` against the truth list (J4 in SURVEY.md §2)."""
+    return f"""
+SELECT {cols}, CASE WHEN _hit THEN '+' ELSE '-' END AS flag
+FROM {est} est
+LEFT JOIN (
+  SELECT item, true AS _hit FROM ({_true_frequent_spark_sql(phi, "item")}) t
+) truth USING (item)"""
 
 
 def reservoir_report(
@@ -160,17 +208,11 @@ def reservoir_report(
 ) -> DataFrame:
     """Distinct reservoir items flagged against the exact frequent set:
     DataFrame[item, flag('+'|'-')] (reference report big_data_computing_3.py:120-128).
-    The membership test is a left join — the reference's Python ``in``
-    against the truth list (J4 in SURVEY.md §2).
     """
-    m = reservoir_size(phi)
-    sample = reservoir_sample(stream, m, seed).select("item").distinct()
-    truth = true_frequent_items(stream, phi).select(
-        "item", F.lit(True).alias("_hit")
-    )
-    return sample.join(truth, "item", "left").select(
-        "item",
-        F.when(F.col("_hit"), F.lit("+")).otherwise(F.lit("-")).alias("flag"),
+    sample = _reservoir_sample_spark_sql(reservoir_size(phi), seed)
+    sample = f"(SELECT DISTINCT item FROM ({sample}) reservoir)"
+    return stream.sparkSession.sql(
+        _flagged_spark_sql(sample, "item", phi), stream=stream
     )
 
 
@@ -358,6 +400,27 @@ FROM top
 # ---------------------------------------------------------------------------
 
 
+def _sticky_counts_spark_sql(n: int | None, r: float, seed: int) -> str:
+    if n is None:
+        sampled = (
+            "(SELECT /*+ BROADCAST(_tot) */ * "
+            f"FROM {{stream}} CROSS JOIN {_STREAM_TOTAL})"
+        )
+        rate = f"{sql_double(r)} / _total"
+    else:
+        sampled, rate = "{stream}", sql_double(r / n)
+    return f"""
+SELECT item, count(*) AS est_cnt
+FROM {{stream}}
+JOIN (
+  SELECT item, min(seq) AS aseq FROM {sampled} sampled
+  WHERE {_u_spark_sql("sticky", seed, "seq")} < {rate}
+  GROUP BY item
+) admissions USING (item)
+WHERE seq >= aseq
+GROUP BY item"""
+
+
 def sticky_counts(
     stream: DataFrame, n: int | None, r: float, seed: int = 0
 ) -> DataFrame:
@@ -374,22 +437,8 @@ def sticky_counts(
     ``n=None`` takes n from the stream inside the plan (a broadcast
     count); the rate is the same double division as ``r / n``.
     """
-    if n is None:
-        sampled = stream.crossJoin(_stream_total(stream))
-        rate = F.lit(r) / F.col("_total")
-    else:
-        sampled, rate = stream, F.lit(r / n)
-    lucky = _u("sticky", seed, F.col("seq")) < rate
-    admissions = (
-        sampled.where(lucky)
-        .groupBy("item")
-        .agg(F.min("seq").alias("aseq"))
-    )
-    return (
-        stream.join(admissions, "item")
-        .where(F.col("seq") >= F.col("aseq"))
-        .groupBy("item")
-        .agg(F.count("*").alias("est_cnt"))
+    return stream.sparkSession.sql(
+        _sticky_counts_spark_sql(n, r, seed), stream=stream
     )
 
 
@@ -410,21 +459,17 @@ def sticky_report(
     runs no job; the threshold is the same double product as
     ``(phi - epsilon) * n``.
     """
-    r = sticky_rate(phi, epsilon, delta)
-    est = sticky_counts(stream, n, r, seed)
+    est = _sticky_counts_spark_sql(n, sticky_rate(phi, epsilon, delta), seed)
     if n is None:
-        est = est.crossJoin(_stream_total(stream)).where(
-            F.col("est_cnt") > F.lit(phi - epsilon) * F.col("_total")
-        )
+        est = f"""(
+  SELECT /*+ BROADCAST(_tot) */ * FROM ({est}) est CROSS JOIN {_STREAM_TOTAL}
+  WHERE est_cnt > {sql_double(phi - epsilon)} * _total)"""
     else:
-        est = est.where(F.col("est_cnt") > F.lit((phi - epsilon) * n))
-    truth = true_frequent_items(stream, phi).select(
-        "item", F.lit(True).alias("_hit")
-    )
-    return est.join(truth, "item", "left").select(
-        "item",
-        "est_cnt",
-        F.when(F.col("_hit"), F.lit("+")).otherwise(F.lit("-")).alias("flag"),
+        est = f"""(
+  SELECT * FROM ({est}) est
+  WHERE est_cnt > {sql_double((phi - epsilon) * n)})"""
+    return stream.sparkSession.sql(
+        _flagged_spark_sql(est, "item, est_cnt", phi), stream=stream
     )
 
 
@@ -1482,7 +1527,9 @@ def mg_frequent_exact(
         F.count("*").alias("cnt")
     )
     return (
-        counts.crossJoin(_stream_total(stream))
+        counts.crossJoin(
+            F.broadcast(stream.agg(F.count("*").alias("_total")))
+        )
         .where(F.col("cnt") >= F.lit(phi) * F.col("_total"))
         .select("item", "cnt")
     )

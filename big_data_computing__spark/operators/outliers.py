@@ -3,7 +3,7 @@
 Re-expresses the reference's two outlier algorithms
 (``ExactOutliers`` big_data_computing_1.py:30-52 and ``MRApproxOutliers``
 big_data_computing_1.py:78-114 / big_data_computing_2.py:84-113) as pure
-DataFrame plans.
+relational plans.
 
 Definitions (reference semantics, preserved exactly):
 - |B(p,D)| = number of points within distance D of p, **including p itself**
@@ -13,6 +13,17 @@ Definitions (reference semantics, preserved exactly):
   cell neighborhood, N7 in the 7×7 (big_data_computing_1.py:91-95).
   A cell is **sure-outlier** if N3<=M ∧ N7<=M, **uncertain** if N3<=M ∧ N7>M
   (big_data_computing_1.py:101-103).
+
+Plan building: each 2-D operator renders its whole plan as one Spark SQL
+text in Python and runs it with one ``spark.sql(text, points=df)`` call,
+which registers the input as a temp view for the analysis and drops it
+afterwards. The operators keep their DataFrame-in / DataFrame-out
+signatures. The DataFrame and SQL front ends meet in the same Catalyst
+plan, so the executed plan is the one the equivalent DataFrame calls
+give; what goes is the py4j round trip per ``Column``. The
+``_*_spark_sql`` functions take the text of their input relation, so the
+operators compose as nested subqueries. Floats are rendered by
+``sql_double`` (DOUBLE literals, never DECIMAL).
 
 Scale design (100 TB target):
 - ExactOutliers: the reference is a driver-local O(n²) loop gated at
@@ -38,18 +49,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geometry import cell_coord, grid_lambda, sq_dist_2d
+from ..functions.geometry import (
+    cell_coord_spark_sql,
+    grid_lambda,
+    sq_dist_2d_spark_sql,
+)
+from ..functions.sqlsafe import sql_double
 
 _OFFSETS_3X3 = [(di, dj) for di in range(-1, 2) for dj in range(-1, 2)]
 _OFFSETS_7X7 = [(di, dj) for di in range(-3, 4) for dj in range(-3, 4)]
 
 
-def _offsets_array(offsets: list[tuple[int, int]]) -> Column:
-    """The offsets as one literal array<struct<di, dj>>, rendered as a
-    single SQL expression: one JVM call instead of several per offset.
-    The optimized plan is the same as the element-wise
-    ``F.array(F.struct(F.lit(di), F.lit(dj)), ...)``."""
-    return F.expr(
+def _offsets_sql(offsets: list[tuple[int, int]]) -> str:
+    """The offsets as one literal array<struct<di, dj>> in Spark SQL;
+    the optimizer folds it to a single literal."""
+    return (
         "array("
         + ", ".join(f"named_struct('di', {di}, 'dj', {dj})" for di, dj in offsets)
         + ")"
@@ -59,6 +73,32 @@ def _offsets_array(offsets: list[tuple[int, int]]) -> Column:
 # ---------------------------------------------------------------------------
 # Exact algorithm
 # ---------------------------------------------------------------------------
+
+
+def _ball_counts_spark_sql(
+    src: str, d: float, id_col: str, x: str, y: str
+) -> str:
+    """|B(p,D)| per point of relation ``src``: (id, ball_count)."""
+    base = (
+        f"(SELECT {id_col} AS id, CAST({x} AS DOUBLE) AS x, "
+        f"CAST({y} AS DOUBLE) AS y, "
+        f"{cell_coord_spark_sql(f'CAST({x} AS DOUBLE)', d)} AS ci, "
+        f"{cell_coord_spark_sql(f'CAST({y} AS DOUBLE)', d)} AS cj "
+        f"FROM {src})"
+    )
+    return f"""
+SELECT id, count(*) AS ball_count
+FROM (
+  SELECT id, x, y, ci + o.di AS nci, cj + o.dj AS ncj
+  FROM (
+    SELECT id, x, y, explode({_offsets_sql(_OFFSETS_3X3)}) AS o, ci, cj
+    FROM {base} base
+  ) exploded
+) probe
+JOIN (SELECT ci AS nci, cj AS ncj, x AS cx, y AS cy FROM {base} base) cand
+  USING (nci, ncj)
+WHERE {sq_dist_2d_spark_sql("x", "y", "cx", "cy")} <= {sql_double(d * d)}
+GROUP BY id"""
 
 
 def ball_counts(
@@ -75,38 +115,18 @@ def ball_counts(
     cell neighborhood — the equi-join on (cell of probe) = (cell of
     candidate) is exact after the distance filter.
     """
-    base = points.select(
-        F.col(id_col).alias("id"),
-        F.col(x).cast("double").alias("x"),
-        F.col(y).cast("double").alias("y"),
-        cell_coord(F.col(x).cast("double"), d).alias("ci"),
-        cell_coord(F.col(y).cast("double"), d).alias("cj"),
+    return points.sparkSession.sql(
+        _ball_counts_spark_sql("{points}", d, id_col, x, y), points=points
     )
-    probe = base.select(
-        "id",
-        "x",
-        "y",
-        F.explode(_offsets_array(_OFFSETS_3X3)).alias("o"),
-        "ci",
-        "cj",
-    ).select(
-        "id",
-        "x",
-        "y",
-        (F.col("ci") + F.col("o.di")).alias("nci"),
-        (F.col("cj") + F.col("o.dj")).alias("ncj"),
+
+
+def _exact_outliers_spark_sql(
+    src: str, d: float, m: int, id_col: str, x: str, y: str
+) -> str:
+    return (
+        f"SELECT * FROM ({_ball_counts_spark_sql(src, d, id_col, x, y)}) b "
+        f"WHERE ball_count <= {int(m)}"
     )
-    cand = base.select(
-        F.col("ci").alias("nci"),
-        F.col("cj").alias("ncj"),
-        F.col("x").alias("cx"),
-        F.col("y").alias("cy"),
-    )
-    pairs = probe.join(cand, ["nci", "ncj"]).where(
-        sq_dist_2d(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
-        <= F.lit(d * d)
-    )
-    return pairs.groupBy("id").agg(F.count("*").alias("ball_count"))
 
 
 def exact_outliers(
@@ -122,8 +142,9 @@ def exact_outliers(
     Distributed replacement for the reference's driver-local O(n²) scan
     (big_data_computing_1.py:30-44); no n <= 200k gate required.
     """
-    return ball_counts(points, d, id_col, x, y).where(
-        F.col("ball_count") <= F.lit(m)
+    return points.sparkSession.sql(
+        _exact_outliers_spark_sql("{points}", d, m, id_col, x, y),
+        points=points,
     )
 
 
@@ -139,16 +160,29 @@ def exact_outliers_topk(
     """First K outliers in ascending |B(p,D)| order (reference prints the
     K smallest-ball points, big_data_computing_1.py:48-53). Tie-break on id
     for determinism — the reference's sort leaves ties ambiguous."""
-    return (
-        exact_outliers(points, d, m, id_col, x, y)
-        .orderBy("ball_count", "id")
-        .limit(k)
+    outliers = _exact_outliers_spark_sql("{points}", d, m, id_col, x, y)
+    return points.sparkSession.sql(
+        f"SELECT * FROM ({outliers}) o ORDER BY ball_count, id LIMIT {int(k)}",
+        points=points,
     )
 
 
 # ---------------------------------------------------------------------------
 # Grid approximation
 # ---------------------------------------------------------------------------
+
+
+def _cell_counts_spark_sql(src: str, d: float, x: str, y: str) -> str:
+    """Non-empty Λ-grid cells of relation ``src``: (ci, cj, cnt)."""
+    lam = grid_lambda(d)
+    return f"""
+SELECT ci, cj, count(*) AS cnt
+FROM (
+  SELECT {cell_coord_spark_sql(f"CAST({x} AS DOUBLE)", lam)} AS ci,
+         {cell_coord_spark_sql(f"CAST({y} AS DOUBLE)", lam)} AS cj
+  FROM {src}
+) c
+GROUP BY ci, cj"""
 
 
 def cell_counts(
@@ -160,62 +194,51 @@ def cell_counts(
     reference's hand-rolled combiner + reduceByKey
     (big_data_computing_1.py:80-83).
     """
-    lam = grid_lambda(d)
-    return (
-        points.select(
-            cell_coord(F.col(x).cast("double"), lam).alias("ci"),
-            cell_coord(F.col(y).cast("double"), lam).alias("cj"),
-        )
-        .groupBy("ci", "cj")
-        .agg(F.count("*").alias("cnt"))
+    return points.sparkSession.sql(
+        _cell_counts_spark_sql("{points}", d, x, y), points=points
     )
 
 
-def cells_with_neighborhood(cells: DataFrame) -> DataFrame:
-    """Attach N3 and N7 neighborhood sums to each cell.
+def _neighborhood_spark_sql(src: str) -> str:
+    """N3 and N7 sums for each cell of relation ``src`` (ci, cj, cnt):
+    (ci, cj, cnt, n3, n7).
 
     Scatter-aggregate (SURVEY.md A4/A5): each cell sends its ``cnt`` to
     the 49 cells of its 7×7 neighborhood, flagged ``own`` for the (0,0)
-    offset and ``near3`` inside the 3×3 core. One ``groupBy`` on the
+    offset and ``near3`` inside the 3×3 core. One ``GROUP BY`` on the
     target cell then sums N3, N7 and the cell's own count; targets that
     received no ``own`` share are empty cells and drop out. That is one
     scan of the cell table and one hash aggregation: no self-join, so
     the cell table needs no cache and no broadcast. Cells with a NULL
-    coordinate belong to no grid cell and are dropped.
+    coordinate belong to no grid cell and are dropped. The coalesces
+    keep cnt and n3 non-nullable in the schema, as the count(*) they
+    come from is.
     """
-    o = F.explode(_offsets_array(_OFFSETS_7X7)).alias("o")
-    own = (F.col("o.di") == 0) & (F.col("o.dj") == 0)
-    near3 = (F.abs(F.col("o.di")) <= 1) & (F.abs(F.col("o.dj")) <= 1)
-    return (
-        cells.where(F.col("ci").isNotNull() & F.col("cj").isNotNull())
-        .select("ci", "cj", "cnt", o)
-        .groupBy(
-            (F.col("ci") + F.col("o.di")).alias("ci"),
-            (F.col("cj") + F.col("o.dj")).alias("cj"),
-        )
-        .agg(
-            F.sum(F.when(own, F.col("cnt"))).alias("own"),
-            F.sum(F.when(near3, F.col("cnt"))).alias("n3"),
-            F.sum("cnt").alias("n7"),
-        )
-        .where(F.col("own").isNotNull())
-        # coalesce keeps cnt and n3 non-nullable in the schema, as the
-        # count(*) they come from is
-        .select(
-            "ci",
-            "cj",
-            F.coalesce("own", F.lit(0)).alias("cnt"),
-            F.coalesce("n3", F.lit(0)).alias("n3"),
-            "n7",
-        )
-    )
+    return f"""
+SELECT ci, cj, coalesce(own, 0) AS cnt, coalesce(n3, 0) AS n3, n7
+FROM (
+  SELECT ci + o.di AS ci, cj + o.dj AS cj,
+         sum(CASE WHEN o.di = 0 AND o.dj = 0 THEN cnt END) AS own,
+         sum(CASE WHEN abs(o.di) <= 1 AND abs(o.dj) <= 1 THEN cnt END) AS n3,
+         sum(cnt) AS n7
+  FROM (
+    SELECT ci, cj, cnt, explode({_offsets_sql(_OFFSETS_7X7)}) AS o
+    FROM {src} cells
+    WHERE ci IS NOT NULL AND cj IS NOT NULL
+  ) scatter
+  GROUP BY ci + o.di, cj + o.dj
+) targets
+WHERE own IS NOT NULL"""
 
 
 def approx_outlier_cells(
     points: DataFrame, d: float, x: str = "x", y: str = "y"
 ) -> DataFrame:
     """Full per-cell report: DataFrame[ci, cj, cnt, n3, n7]."""
-    return cells_with_neighborhood(cell_counts(points, d, x, y))
+    cells = _cell_counts_spark_sql("{points}", d, x, y)
+    return points.sparkSession.sql(
+        _neighborhood_spark_sql(f"({cells})"), points=points
+    )
 
 
 def approx_outliers_summary(
@@ -228,17 +251,18 @@ def approx_outliers_summary(
     stay in the plan (no collect-then-sum as in the reference,
     big_data_computing_1.py:101-104).
     """
-    cells = approx_outlier_cells(points, d, x, y)
-    m_lit = F.lit(m)
-    sure = (F.col("n3") <= m_lit) & (F.col("n7") <= m_lit)
-    uncertain = (F.col("n3") <= m_lit) & (F.col("n7") > m_lit)
-    return cells.agg(
-        F.coalesce(F.sum(F.when(sure, F.col("cnt"))), F.lit(0))
-        .cast("long")
-        .alias("sure_outliers"),
-        F.coalesce(F.sum(F.when(uncertain, F.col("cnt"))), F.lit(0))
-        .cast("long")
-        .alias("uncertain_points"),
+    cells = _neighborhood_spark_sql(
+        f"({_cell_counts_spark_sql('{points}', d, x, y)})"
+    )
+    m = int(m)
+    return points.sparkSession.sql(
+        f"""
+SELECT CAST(coalesce(sum(CASE WHEN n3 <= {m} AND n7 <= {m} THEN cnt END), 0)
+            AS BIGINT) AS sure_outliers,
+       CAST(coalesce(sum(CASE WHEN n3 <= {m} AND n7 > {m} THEN cnt END), 0)
+            AS BIGINT) AS uncertain_points
+FROM ({cells}) cells""",
+        points=points,
     )
 
 
@@ -479,8 +503,10 @@ def smallest_cells_topk(
     sort stability; here the order is explicit and total:
     (cnt, ci, cj) ascending.
     """
-    return (
-        cell_counts(points, d, x, y).orderBy("cnt", "ci", "cj").limit(k)
+    cells = _cell_counts_spark_sql("{points}", d, x, y)
+    return points.sparkSession.sql(
+        f"SELECT * FROM ({cells}) cells ORDER BY cnt, ci, cj LIMIT {int(k)}",
+        points=points,
     )
 
 

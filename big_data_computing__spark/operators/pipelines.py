@@ -123,11 +123,11 @@ def fft_radius_outliers(
     The 2-D points are lifted to the d-dim features form for MRFFT, then
     the returned radius parameterizes the cell grid.
     """
-    pts_nd = points_2d.select(
-        F.col(id_col).alias("id"),
-        F.array(F.col(x).cast("double"), F.col(y).cast("double")).alias(
-            "features"
-        ),
+    pts_nd = points_2d.sparkSession.sql(
+        f"SELECT {id_col} AS id, "
+        f"array(CAST({x} AS DOUBLE), CAST({y} AS DOUBLE)) AS features "
+        "FROM {points}",
+        points=points_2d,
     )
     fft = mr_fft(pts_nd, k=k, l=l, seed=seed)
     t0 = time.time()

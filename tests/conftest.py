@@ -8,6 +8,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from big_data_computing__spark.session import get_session
+from timeouts import pytest_configure, pytest_runtest_call  # noqa: F401
 
 SF_DIR = "/root/testdata/sf0.001"
 

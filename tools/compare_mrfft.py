@@ -37,7 +37,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SHIM_DISTANCE = '''\
 """Minimal numpy-backed stand-in for scipy.spatial.distance.cdist

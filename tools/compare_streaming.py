@@ -22,12 +22,14 @@ Usage: python tools/compare_streaming.py [sf_dir]   (default sf0.01)
 
 from __future__ import annotations
 
+import os
 import socket
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from big_data_computing__spark.operators import frequent as fr
 from big_data_computing__spark.session import get_session

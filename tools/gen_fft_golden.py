@@ -19,9 +19,11 @@ Usage: python tools/gen_fft_golden.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -33,7 +35,7 @@ from big_data_computing__spark.sources import readers as rd
 
 SF_DIR = "/root/testdata/sf0.01"
 OUT = (
-    "/root/repo/big_data_computing__spark/plans/fft_golden_sf001.py"
+    os.path.join(REPO, "big_data_computing__spark/plans/fft_golden_sf001.py")
 )
 
 

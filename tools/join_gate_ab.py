@@ -22,12 +22,14 @@ recorded in STRESS.md.
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

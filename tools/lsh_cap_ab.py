@@ -33,11 +33,13 @@ recorded in STRESS.md (r9).
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

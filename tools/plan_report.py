@@ -6,10 +6,12 @@ Usage: python tools/plan_report.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from big_data_computing__spark.plans import explain_formatted
@@ -217,7 +219,7 @@ def main() -> None:
         if kept:
             lines.append("\n".join(kept))
         lines.append("```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print("wrote PLANS.md")
     spark.stop()

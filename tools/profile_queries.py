@@ -53,8 +53,8 @@ class Py4jCalls:
 
     def __init__(self, spark) -> None:
         self.n = 0
-        client = spark.sparkContext._gateway._gateway_client
-        send = client.send_command
+        self._client = spark.sparkContext._gateway._gateway_client
+        send = self._send = self._client.send_command
 
         def counted(command, *args, **kwargs):
             if not command.startswith("m\n"):
@@ -62,7 +62,11 @@ class Py4jCalls:
             return send(command, *args, **kwargs)
 
         # JavaObjects call send_command on this one client instance
-        client.send_command = counted
+        self._client.send_command = counted
+
+    def close(self) -> None:
+        """Stop counting."""
+        self._client.send_command = self._send
 
 
 def build_jobs(spark, group: str) -> int:

@@ -22,11 +22,13 @@ Usage: python tools/skew_ab.py [n_rows] (default 30M)
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 

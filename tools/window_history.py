@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BEGIN = "<!-- WINDOW_HISTORY_BEGIN (generated by tools/window_history.py) -->"
 END = "<!-- WINDOW_HISTORY_END -->"
@@ -28,7 +30,7 @@ def collect() -> str:
 
     last_green: dict[str, int] = {}
     last_seen: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         for name, row in json.load(open(path)).items():
             ok = bool(row.get("hash_match"))
@@ -36,7 +38,7 @@ def collect() -> str:
             if ok:
                 last_green[name] = max(rnd, last_green.get(name, 0))
     reg = list(entrymod.queries())
-    full_files = sorted(glob.glob("/root/repo/ORACLE_FULL_r*.json"))
+    full_files = sorted(glob.glob(os.path.join(REPO, "ORACLE_FULL_r*.json")))
     full = json.load(open(full_files[-1])) if full_files else {}
     lines = [
         BEGIN,
@@ -90,7 +92,7 @@ def collect() -> str:
 
 
 def main() -> int:
-    path = "/root/repo/COVERAGE.md"
+    path = os.path.join(REPO, "COVERAGE.md")
     text = open(path).read()
     table = collect()
     if BEGIN in text:
