@@ -14,6 +14,15 @@ keeps its state-partition count for life; each state partition costs a
 task and a delta-file write on every micro-batch commit. So stateful
 streams size their state to the task slots instead, through
 ``streaming/stateful.py::start_stateful``.
+
+Python workers start from ``worker_daemon.py``, the engine's copy of
+pyspark's worker daemon (``spark.python.daemon.module``). It stops each
+Python-worker task from re-reading ``pyspark.zip``'s directory once per
+zipimporter, which cost 0.33 s of a 0.39 s one-row task on Python 3.11.
+The workers import this package from its own directory: it is on their
+``PYTHONPATH``, and ``PYTHONSAFEPATH=1`` keeps the JVM's working
+directory off their ``sys.path``, so a stale copy of the package there
+cannot shadow it.
 """
 
 from __future__ import annotations
@@ -48,6 +57,13 @@ def get_session(
     does not size streaming state: ``start_stateful`` starts stateful
     queries with one state partition per task slot, because their
     commit cost is per partition and AQE cannot coalesce it away.
+
+    Python workers are forked by ``worker_daemon.py``, which skips the
+    per-task re-read of unchanged zip archives on the import path. They
+    find this package through ``spark.executorEnv.PYTHONPATH``, and
+    ``spark.executorEnv.PYTHONSAFEPATH=1`` stops ``python -m`` from
+    putting the JVM's working directory ahead of it on ``sys.path``.
+    Like every conf set here, ``extra_conf`` can override them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # local mode = single JVM: driver memory is the only heap knob that
@@ -70,6 +86,11 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # merged by PySpark's worker factory into each worker's path
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # the daemon runs as `python -m`, which would otherwise put the
+        # working directory, and any package copy in it, first
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
+        # started by the JVM with `python -m`, in place of pyspark.daemon
+        .config("spark.python.daemon.module", f"{ENGINE_NAME}.worker_daemon")
         # UTC pins TIMESTAMP_NTZ→TIMESTAMP casts and timestamp literals so
         # event-time arithmetic matches DuckDB's epoch_us exactly
         .config("spark.sql.session.timeZone", "UTC")

@@ -63,25 +63,34 @@ def test_workers_import_package_found_only_on_sys_path(
 ):
     """A caller that puts the repo on ``sys.path`` (not PYTHONPATH, not
     the working directory) still runs Python-UDF queries: the session
-    hands the package's directory to the workers."""
+    hands the package's directory to the workers. A broken copy of the
+    package in the working directory does not shadow it in the workers
+    (Spark starts their daemon with ``python -m``)."""
     script = tmp_path / "sys_path_only.py"
     script.write_text(_SYS_PATH_ONLY)
+    shadowed = tmp_path / "shadowed"
+    (shadowed / "big_data_computing__spark").mkdir(parents=True)
+    (shadowed / "big_data_computing__spark" / "__init__.py").write_text(
+        'raise ImportError("package copy in the working directory")\n'
+    )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
-    run = subprocess.run(
-        [sys.executable, str(script), str(REPO), sf_dir],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert run.returncode == 0, run.stderr[-4000:]
-    got = json.loads(run.stdout.strip().splitlines()[-1])
     want = sorted(
         r["vec_id"]
         for r in entrymod.queries()["x_semdedup_survivors"](
             spark, sf_dir
         ).collect()
     )
-    assert got == want and got
+    assert want
+    for cwd in (tmp_path, shadowed):
+        run = subprocess.run(
+            [sys.executable, str(script), str(REPO), sf_dir],
+            cwd=cwd,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert run.returncode == 0, (cwd, run.stderr[-4000:])
+        got = json.loads(run.stdout.strip().splitlines()[-1])
+        assert got == want, cwd

@@ -4,6 +4,9 @@ entry at sf0.01 and hash-compare against oracle_sql() via DuckDB.
 Usage: python tools/verify_oracle.py [sf_dir] [only1,only2,...]
          [--json OUT.json]
 
+The verdict counts only the queries that ran. A name in the filter
+that is not registered stops the run with exit status 2.
+
 --json writes a per-query artifact (the committed full-registry runs,
 e.g. ORACLE_FULL_r03.json — the driver's own CORRECTNESS files cover
 only the first 50 registry entries per round).
@@ -122,6 +125,14 @@ def main() -> int:
         skip = GOLDEN_SF_BOUND if arg == "golden" else set(arg.split(","))
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    only = set(argv[1].split(",")) if len(argv) > 1 else None
+    unknown = sorted((only or set()) - set(qs))
+    if unknown:
+        print(f"not registered: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    selected = [name for name in qs if only is None or name in only]
     results: dict[str, dict] = {}
     spark = get_session()
     con = duckdb.connect()
@@ -130,13 +141,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    only = set(argv[1].split(",")) if len(argv) > 1 else None
     failures = []
-    for name, fn in qs.items():
-        if only is not None and name not in only:
-            continue
+    for name in selected:
+        fn = qs[name]
         if name in skip:
             print(f"skip {name}: result-golden pinned at another sf")
             results[name] = {"match": None, "err": "skipped_golden"}
@@ -208,9 +215,10 @@ def main() -> int:
             donly = [r for r in drows if r not in srows][:2]
             print(f"     spark-only: {sonly}")
             print(f"     duck-only:  {donly}")
+    checked = sum(1 for name in selected if name in oracles)
     print(
-        f"\n{len(qs) - len(failures)}/{len(qs)} queries pass "
-        f"({len(oracles)} oracle-checked)"
+        f"\n{len(selected) - len(failures)}/{len(selected)} queries pass "
+        f"({checked} oracle-checked)"
     )
     if json_out is not None:
         with open(json_out, "w") as f:
