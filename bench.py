@@ -1,7 +1,12 @@
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+ "env": {...}}
+
+``env`` states the run's own setup: master, default parallelism, Spark
+version, shuffle partitions, the generated-class cache size, and the
+classes Janino compiled over the whole run.
 
 Per-query wall-clock includes plan build + execution to completion
 (count-style consumption; results are not materialized to the driver
@@ -20,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from big_data_computing__spark.session import get_session
+from tools.profile_queries import codegen_compiles
 
 # Headline set: every SURVEY §2 core operator + one per extension family.
 BENCH_QUERIES = [
@@ -320,12 +326,17 @@ BENCH_QUERIES = [
 # transition commit lands one old-order and one new-order run side by
 # side (BENCH_OPT_r11_before.json = consecutive, the r11 after/clean
 # artifacts = interleaved).
-# Measured cost of the new default (r11, both artifacts committed):
-# interleaving re-pays per-query planning/codegen on every repeat
-# (140 plans cycle through the bounded codegen caches between
-# repeats), which raises the reported totals ~10-15% uniformly vs the
-# old warm consecutive-repeat medians — a methodology shift, not a
-# code change. SPARK_GRAFT_REPEAT_ORDER=consecutive restores the old
+# Codegen under the interleaved order: the 140 queries generate ~2,900
+# distinct classes, far more than Spark's default 100-entry generated-
+# class cache holds, so each interleaved repeat ran Janino again on most
+# of its classes (14,436-14,447 compiles per sf0.01 run, 4 vCPU). With
+# the cache sized by session.CODEGEN_CACHE_ENTRIES and class names free
+# of codegen stage ids, the same run compiles 2,108-2,112 classes, each
+# once, and its total fell from 132.9-158.9 s to 103.2-110.6 s; the
+# artifact's env.codegen_compiles reports the count. Planning is still
+# re-paid on every repeat, in either order. The r11 artifacts, whose
+# totals read ~10-15% above the consecutive medians, predate the larger
+# cache. SPARK_GRAFT_REPEAT_ORDER=consecutive restores the old
 # order for same-methodology A/Bs against pre-r11 artifacts; the
 # artifact always reports which order produced it.
 REPEATS = 3
@@ -376,7 +387,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_session(app_name="bdc_bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     qs = entrymod.queries()
 
     # warm the JVM/codegen paths once with the cheapest query
@@ -481,6 +493,19 @@ def main() -> None:
                 "canary": {"start": canary_start, "end": canary_end},
                 "repeat_order": REPEAT_ORDER,
                 "sf": float(sf),
+                "env": {
+                    "master": sc.master,
+                    "default_parallelism": sc.defaultParallelism,
+                    "spark": spark.version,
+                    "shuffle_partitions": int(
+                        spark.conf.get("spark.sql.shuffle.partitions")
+                    ),
+                    "codegen_cache_max_entries": int(
+                        spark.conf.get("spark.sql.codegen.cache.maxEntries")
+                    ),
+                    # classes Janino compiled over the whole run
+                    "codegen_compiles": codegen_compiles(spark),
+                },
             }
         )
     )

@@ -23,6 +23,27 @@ The workers import this package from its own directory: it is on their
 ``PYTHONPATH``, and ``PYTHONSAFEPATH=1`` keeps the JVM's working
 directory off their ``sys.path``, so a stale copy of the package there
 cannot shadow it.
+
+Spark keeps the classes Janino compiles from generated code in one
+JVM-wide LRU cache, keyed by the generated source. Its default of 100
+entries is smaller than what the engine cycles through: a pass of
+``paper_core``'s nine paper queries generates ~120 distinct classes and
+the bench CLI's 140 queries at sf0.01 ~2,900, so a repeating cycle of
+queries evicted most classes before their next use and re-ran Janino on
+them (39-76 compiles per timed ``paper_core`` pass at sf0.01).
+``CODEGEN_CACHE_ENTRIES`` holds that working set with room to spare.
+By default the source also names its class after the whole-stage codegen
+stage id, which AQE assigns in the order concurrent query stages finish:
+``t5_reservoir_report``'s last two stages trade ids 5 and 6 between
+runs, so one plan had two sources and a warm run could compile 4
+classes again. ``spark.sql.codegen.useIdInClassName=false`` names every
+such class ``GeneratedIterator``, so one plan has one source, and
+queries share classes: a bench CLI run compiles 2,108-2,112 classes, against
+14,436-14,447 at Spark's defaults. Once warm, a repeated plan compiles
+nothing, on the driver and, in local mode, in the tasks, which share the
+cache. Keeping the classes cost no Metaspace that showed at the bench
+CLI's peak (sf0.01: 211.7-216.6 MB at Spark's defaults, 208.5-208.6 MB
+with both confs): an evicted class stays loaded until a collection unloads it.
 """
 
 from __future__ import annotations
@@ -39,6 +60,10 @@ ENGINE_NAME = "big_data_computing__spark"
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__))
 )
+
+# ``spark.sql.codegen.cache.maxEntries``: above the ~2,900 classes the
+# bench CLI's 140 queries generate (the module docstring says why).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_session(
@@ -63,7 +88,20 @@ def get_session(
     find this package through ``spark.executorEnv.PYTHONPATH``, and
     ``spark.executorEnv.PYTHONSAFEPATH=1`` stops ``python -m`` from
     putting the JVM's working directory ahead of it on ``sys.path``.
-    Like every conf set here, ``extra_conf`` can override them.
+
+    The generated-class cache holds ``CODEGEN_CACHE_ENTRIES`` (4096)
+    classes, not Spark's 100: a ``paper_core`` pass needs ~120 and the
+    bench CLI ~2,900, and a cycle of queries larger than an LRU cache
+    misses on most of its classes. The conf is static: it takes effect
+    only in the session that starts the JVM. Generated classes are not
+    named after their codegen stage id
+    (``spark.sql.codegen.useIdInClassName=false``), because AQE numbers
+    the stages in the order they finish and a new number is a new
+    source to compile; ``explain()`` still shows the ids. With both,
+    the third ``paper_core`` pass at sf0.001 compiles no class (82-106
+    at Spark's defaults).
+
+    ``extra_conf`` can override every conf set here.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # local mode = single JVM: driver memory is the only heap knob that
@@ -94,6 +132,12 @@ def get_session(
         # UTC pins TIMESTAMP_NTZ→TIMESTAMP casts and timestamp literals so
         # event-time arithmetic matches DuckDB's epoch_us exactly
         .config("spark.sql.session.timeZone", "UTC")
+        # keep every generated class of a repeated query compiled, under
+        # one name whatever codegen stage id AQE gave it this run
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions if shuffle_partitions is not None else 32),

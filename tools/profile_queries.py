@@ -14,6 +14,10 @@ For each named registry query:
   4. snapshots the Spark REST API job list around the run and prints the
      top jobs by duration with their descriptions — the local-mode
      equivalent of reading the UI's Jobs tab (guide §1.1/§7.1)
+  5. counts the classes Janino compiles (Spark's ``CodegenMetrics``) in
+     the first build+collect and in a second run of the query. A warm
+     second run should compile none; ``run2_compiles`` above 0 means the
+     generated-class cache evicted the query's classes (cache thrash)
 
 Usage:
   python tools/profile_queries.py <tag> <suffix> name1,name2,...
@@ -69,6 +73,13 @@ class Py4jCalls:
         self._client.send_command = self._send
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``); a cache hit compiles none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def build_jobs(spark, group: str) -> int:
     """Jobs of ``group`` that have finished."""
     sc = spark.sparkContext
@@ -99,6 +110,7 @@ def main() -> None:
         group = f"profile-build:{name}"
         spark.sparkContext.setJobGroup(group, f"profile:{name}")
         calls_before = calls.n
+        compiles_before = codegen_compiles(spark)
         t0 = time.time()
         df = qs[name](spark, sf_dir)
         t_build = time.time() - t0
@@ -114,11 +126,14 @@ def main() -> None:
         t1 = time.time()
         df.collect()
         t_exec = time.time() - t1
+        compiles_after = codegen_compiles(spark)
+        compiles = compiles_after - compiles_before
         # second run for a steady-state wall number (first run of a
         # fresh plan pays codegen)
         t2 = time.time()
         qs[name](spark, sf_dir).collect()
         t_total2 = time.time() - t2
+        run2_compiles = codegen_compiles(spark) - compiles_after
         spark.sparkContext.setJobDescription(None)
         jobs = [j for j in _api(spark, "/jobs") if j["jobId"] not in jobs_before]
         durs = []
@@ -134,6 +149,7 @@ def main() -> None:
         print(f"== {name}: build={t_build:.2f}s exec={t_exec:.2f}s "
               f"run2={t_total2:.2f}s jobs={len(jobs)} "
               f"build_jobs={n_build_jobs} build_py4j_calls={build_calls} "
+              f"compiles={compiles} run2_compiles={run2_compiles} "
               f"plan={os.path.join(outdir, name + '_' + suffix + '.txt')}")
         for ms, jid, desc in durs[:12]:
             print(f"   {ms/1000.0:7.2f}s  job {jid}  {desc}")
